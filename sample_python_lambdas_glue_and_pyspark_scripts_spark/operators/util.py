@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import json
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 # Inputs smaller than cores x this are "small": a full repartition costs
 # less than leaving any core idle on a compute-heavy stage.
@@ -12,6 +16,22 @@ SMALL_INPUT_BYTES_PER_CORE = 64 * 1024 * 1024
 def estimated_size_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for the plan (file bytes for scans)."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def literal_rows(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A few driver-side rows as a DataFrame built in the JVM, in ONE
+    partition: the rows travel as one JSON string literal that a one-row
+    ``range`` plan parses to ``schema``, so writing it costs one job and
+    one file. ``createDataFrame(list)`` ships the rows through Python
+    serialization and spreads them over ``defaultParallelism`` slices —
+    one (mostly empty) file each. A column expression per value would
+    cost dozens of py4j round trips per row, and as many JVM references
+    that py4j's finalizer thread releases later, in the background; the
+    one literal keeps both at a handful per call, whatever the row and
+    column count."""
+    doc = json.dumps([dict(zip(schema.fieldNames(), row)) for row in rows])
+    parsed = F.from_json(F.lit(doc), ArrayType(schema), {"mode": "FAILFAST"})
+    return spark.range(0, 1, 1, 1).select(F.inline(parsed))
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

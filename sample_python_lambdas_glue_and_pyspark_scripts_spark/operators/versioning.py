@@ -26,8 +26,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 from enum import Enum
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+
+from ..sources import promote
+from .util import literal_rows
 
 
 class ValidationPolicy(int, Enum):
@@ -112,6 +116,12 @@ def catalog_lookup(tables: list[dict], table_type: str) -> list[str]:
     return [t["table_name"] for t in tables if t["table_type"] == table_type]
 
 
+CATALOG_SCHEMA = StructType([
+    StructField(c, StringType())
+    for c in ("opco_id", "table_type", "table_name", "effective_date")
+])
+
+
 @dataclass
 class LoadResult:
     decision: LoadDecision
@@ -123,11 +133,12 @@ class LoadResult:
 class VersionedCatalog:
     """Parquet-backed ACTIVE/FUTURE catalog + table runtime.
 
-    Layout: ``root/_catalog`` (parquet: opco_id, table_type, table_name,
-    effective_date) and ``root/<table_name>/`` parquet data dirs. Data
-    writes append; the catalog is rewritten atomically per update (small —
-    one row per opco x version, bounded like the reference's master-data
-    table).
+    Layout: ``root/_catalog`` (parquet, ``CATALOG_SCHEMA``) and
+    ``root/<table_name>/`` parquet data dirs. Data writes append; the
+    catalog is rewritten atomically per update (small — one row per opco
+    x version, bounded like the reference's master-data table), so each
+    catalog operation reads it ONCE into driver rows and rewrites from
+    those rows.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -137,73 +148,65 @@ class VersionedCatalog:
 
     # --- catalog ---------------------------------------------------------
     def init_opco(self, opco: str) -> None:
-        rows = [
-            (opco, "ACTIVE", f"price_zone_{opco}_a", None),
-            (opco, "FUTURE", f"price_zone_{opco}_b", None),
-        ]
-        df = self.spark.createDataFrame(
-            rows, "opco_id string, table_type string, table_name string, effective_date string"
-        )
-        existing = self._read_catalog()
-        if existing is not None:
-            df = existing.filter(F.col("opco_id") != opco).unionByName(df)
-        self._write_catalog(df)
+        self._write_catalog(_with_opco(self._read_catalog(), opco))
 
     def init_opco_if_absent(self, opco: str) -> None:
-        cat = self._read_catalog()
-        if cat is not None and cat.filter(F.col("opco_id") == opco).limit(1).count():
-            return
-        self.init_opco(opco)
+        rows = self._read_catalog()
+        if not any(r["opco_id"] == opco for r in rows):
+            self._write_catalog(_with_opco(rows, opco))
 
-    def _read_catalog(self) -> DataFrame | None:
+    def _read_catalog(self) -> list[Row]:
+        """The catalog rows; ``[]`` only when no catalog was ever written.
+
+        A catalog that exists but cannot be read raises: reading it as
+        absent would rewrite it holding only the caller's opco."""
         # recover a crashed swap BEFORE reading: otherwise a run that
         # died between the two renames reads "no catalog" and the next
         # write rebuilds it without every other opco's rows
-        from ..sources.promote import recover_backup
+        promote.recover_backup(self.spark, self.catalog_path, error_cls=ETLLoadError)
+        if not _exists(self.spark, self.catalog_path):
+            return []
+        return self.spark.read.schema(CATALOG_SCHEMA).parquet(self.catalog_path).collect()
 
-        recover_backup(
-            self.spark, self.catalog_path, error_cls=ETLLoadError
-        )
-        try:
-            return self.spark.read.parquet(self.catalog_path)
-        except Exception:
-            return None
-
-    def _write_catalog(self, df: DataFrame) -> None:
+    def _write_catalog(self, rows: list[tuple]) -> None:
         # write-then-rename swap via the shared checked-rename helper
         # (sources/promote.py): the live path is only ever a complete
         # catalog, the old catalog survives as backup until the new one
         # is promoted, and a crash between the renames is recovered on
         # the next write (the engine is single-writer, SURVEY §4.3)
-        from ..sources.promote import promote_swap
-
-        promote_swap(
+        df = literal_rows(self.spark, rows, CATALOG_SCHEMA)
+        promote.promote_swap(
             self.spark,
             self.catalog_path,
-            lambda tmp: df.coalesce(1).write.mode("overwrite").parquet(tmp),
+            lambda tmp: df.write.mode("overwrite").parquet(tmp),
             error_cls=ETLLoadError,
         )
 
     def table_name(self, opco: str, table_type: str) -> str:
-        cat = self._read_catalog()
-        assert cat is not None, "catalog not initialized"
-        rows = cat.filter(
-            (F.col("opco_id") == opco) & (F.col("table_type") == table_type)
-        ).collect()
-        if not rows:
-            raise ETLLoadError(f"no {table_type} table registered for opco {opco}")
-        return rows[0]["table_name"]
+        return _lookup(self._read_catalog(), opco, table_type)
 
     def table_path(self, table_name: str) -> str:
         return f"{self.root}/{table_name}"
 
-    def table_is_empty(self, table_name: str) -> bool:
-        """check_table_is_empty (load_job.py:193): LIMIT-1 probe."""
-        try:
-            df = self.spark.read.parquet(self.table_path(table_name))
-        except Exception:
+    def table_is_empty(self, table_name: str, schema: StructType | None = None) -> bool:
+        """check_table_is_empty (load_job.py:193): LIMIT-1 probe. A table
+        never written is empty; one that exists but cannot be read
+        raises. ``schema`` (the table's, when the caller knows it) skips
+        the parquet footer inference job."""
+        path = self.table_path(table_name)
+        if not _exists(self.spark, path):
             return True
-        return len(df.limit(1).collect()) == 0
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return not reader.parquet(path).limit(1).collect()
+
+    def _append(self, df: DataFrame, table_name: str, *metrics: Column) -> dict:
+        """Append ``df`` to a table; returns the write's own observed
+        metrics: ``n`` rows written plus any of ``metrics``."""
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("n"), *metrics).write.mode(
+            "append"
+        ).parquet(self.table_path(table_name))
+        return obs.get
 
     # --- load ------------------------------------------------------------
     def load_opco(
@@ -217,48 +220,39 @@ class VersionedCatalog:
         effective_date_col: str = "effective_date",
     ) -> LoadResult:
         """The per-opco load of find_tables_to_load, on parquet tables."""
-        active = self.table_name(opco, "ACTIVE")
-        future = self.table_name(opco, "FUTURE")
+        rows = self._read_catalog()
+        active = _lookup(rows, opco, "ACTIVE")
+        future = _lookup(rows, opco, "FUTURE")
         running = running_export_opcos or set()
         decision = plan_load(
             is_partial=is_partial,
-            future_empty=self.table_is_empty(future),
+            future_empty=self.table_is_empty(future, df.schema),
             full_export_running=bool(running),
             opco_in_running_export=opco in running,
             policy=policy,
         )
+        # counts ride the writes (DataFrame.observe on each append): every
+        # table's count is what its own write wrote, with no count() job,
+        # even if the upstream plan is non-deterministic
         n_active = n_future = 0
         eff: str | None = None
-        n_rows: int | None = None
-        if decision.write_active or decision.write_future:
-            # count once up front: re-counting after each write would
-            # re-evaluate the plan per table (and could diverge from what
-            # was written if the upstream plan is non-deterministic)
-            n_rows = df.count()
         if decision.write_active:
-            df.write.mode("append").parquet(self.table_path(active))
-            n_active = n_rows
+            n_active = self._append(df, active)["n"]
         if decision.write_future:
-            df.write.mode("append").parquet(self.table_path(future))
-            n_future = n_rows
-        if decision.record_effective_date:
             # min(EFFECTIVE_DATE) of the freshly-built FUTURE table
-            # (load_job.py:238,361-363)
-            row = (
-                self.spark.read.parquet(self.table_path(future))
-                .agg(F.date_format(F.min(effective_date_col), "yyyy-MM-dd HH:mm:ss"))
-                .collect()[0]
+            # (load_job.py:238,361-363). plan_load records the date only
+            # when FUTURE was empty, so the min over this append IS the
+            # min over the table
+            eff_min = F.date_format(F.min(effective_date_col), "yyyy-MM-dd HH:mm:ss")
+            m = self._append(
+                df, future, *([eff_min.alias("eff")] if decision.record_effective_date else [])
             )
-            eff = row[0]
-            cat = self._read_catalog()
-            updated = cat.withColumn(
-                "effective_date",
-                F.when(
-                    (F.col("opco_id") == opco) & (F.col("table_type") == "FUTURE"),
-                    F.lit(eff),
-                ).otherwise(F.col("effective_date")),
-            )
-            self._write_catalog(updated)
+            n_future, eff = m["n"], m.get("eff")
+        if decision.record_effective_date:
+            self._write_catalog([
+                (*r[:3], eff) if (r["opco_id"], r["table_type"]) == (opco, "FUTURE") else r
+                for r in rows
+            ])
         return LoadResult(decision, n_active, n_future, eff)
 
     # --- swap ------------------------------------------------------------
@@ -266,21 +260,35 @@ class VersionedCatalog:
         """Promote FUTURE → ACTIVE after a completed full export: the
         catalog pointers swap atomically (names, not data, move) and the
         new FUTURE (old ACTIVE) is truncated for the next export cycle."""
-        cat = self._read_catalog()
-        old_active = self.table_name(opco, "ACTIVE")
-        swapped = cat.withColumn(
-            "table_type",
-            F.when(
-                F.col("opco_id") == opco,
-                F.when(F.col("table_type") == "ACTIVE", "FUTURE").otherwise("ACTIVE"),
-            ).otherwise(F.col("table_type")),
-        )
-        self._write_catalog(swapped)
+        rows = self._read_catalog()
+        old_active = _lookup(rows, opco, "ACTIVE")
+        flip = {"ACTIVE": "FUTURE", "FUTURE": "ACTIVE"}
+        self._write_catalog([
+            (r[0], flip[r[1]], *r[2:]) if r["opco_id"] == opco else r for r in rows
+        ])
         # truncate the demoted table (now FUTURE) for the next cycle
         path = self.table_path(old_active)
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI.create(path), hconf
-        )
-        fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
+        fs, hpath = promote.hadoop_fs(self.spark, path)
+        fs.delete(hpath(path), True)
+
+
+def _with_opco(rows: list, opco: str) -> list:
+    """Catalog rows with ``opco`` (re)registered: fresh ACTIVE/FUTURE
+    table names, no effective date."""
+    return [r for r in rows if r["opco_id"] != opco] + [
+        (opco, "ACTIVE", f"price_zone_{opco}_a", None),
+        (opco, "FUTURE", f"price_zone_{opco}_b", None),
+    ]
+
+
+def _lookup(rows: list[Row], opco: str, table_type: str) -> str:
+    """S8 analog over the catalog rows (load_job.py:163-181)."""
+    for r in rows:
+        if r["opco_id"] == opco and r["table_type"] == table_type:
+            return r["table_name"]
+    raise ETLLoadError(f"no {table_type} table registered for opco {opco}")
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, hpath = promote.hadoop_fs(spark, path)
+    return fs.exists(hpath(path))

@@ -19,6 +19,16 @@ the reference's 3 s / 2 / x10 — etl_controller_step_function.json:42-51,
 each retry recorded as a LOAD_RETRY ledger row) and only then are
 isolated (try/except per opco) exactly like the reference's Map-state
 Catch (etl_controller_step_function.json:23-67).
+
+The run is bound by Spark jobs, not data, so it issues none it does not
+need: the opcos to load come from the validation report, every read of
+an engine-owned artifact (ledger, catalog, partitioned output, FUTURE
+probe) passes its known schema instead of inferring it from parquet
+footers, each catalog operation reads the catalog once into driver rows,
+ledger/catalog rows are one-partition JVM literals (one job, one file
+per write), and per-table row counts plus FUTURE's min(effective_date)
+are observed on the ACTIVE/FUTURE appends themselves
+(``DataFrame.observe``) rather than counted or re-read afterwards.
 """
 
 from __future__ import annotations
@@ -28,6 +38,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.validation import ValidationReport
 from ..operators.versioning import ValidationPolicy, VersionedCatalog
 from ..session import ensure_runtime_confs
 from ..sources.archive import archive_and_cleanup
@@ -79,6 +90,17 @@ class RunOutcome:
     load_attempts: dict = field(default_factory=dict)
 
 
+def loadable_opcos(rep: ValidationReport) -> list[str]:
+    """The opcos the partitioned write holds, read off the validation
+    report: quarantine drops whole groups and nothing after it drops rows,
+    so they are the valid groups with rows. A null opco never gets here
+    (``member_of`` flags it invalid)."""
+    return sorted(
+        r[rep.group_col] for r in rep.matrix
+        if r["__n"] > 0 and r[rep.group_col] not in rep.invalid_groups
+    )
+
+
 def run_pipeline(spark: SparkSession, cfg: RunConfig) -> RunOutcome:
     # the pipeline round-trips its own partitionBy output (and reads
     # nanos-timestamped inputs); enforce the contract confs on whatever
@@ -114,10 +136,8 @@ def run_pipeline(spark: SparkSession, cfg: RunConfig) -> RunOutcome:
         ).parquet(out_path)
 
         # per-opco versioned load with failure isolation (O1 Map-state)
-        written = spark.read.parquet(out_path)
-        opcos = sorted(
-            r["opco_id"] for r in written.select("opco_id").distinct().collect()
-        )
+        written = spark.read.schema(result.output.schema).parquet(out_path)
+        opcos = loadable_opcos(rep)
         running_exports = ledger.full_export_opcos()
         loaded, failed, reasons, attempts_map = [], [], {}, {}
         for opco in opcos:

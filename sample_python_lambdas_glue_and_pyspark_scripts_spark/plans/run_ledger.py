@@ -19,14 +19,23 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.ledger import admission_rank, idempotent_latest
+from ..operators.util import literal_rows
 
-LEDGER_SCHEMA = (
-    "file_name string, etl_timestamp string, execution_id string, "
-    "status string, file_type string, total_count bigint, valid_count bigint, "
-    "invalid_count bigint, received_opcos string, updated_at bigint"
-)
+LEDGER_SCHEMA = StructType([
+    StructField("file_name", StringType()),
+    StructField("etl_timestamp", StringType()),
+    StructField("execution_id", StringType()),
+    StructField("status", StringType()),
+    StructField("file_type", StringType()),
+    StructField("total_count", LongType()),
+    StructField("valid_count", LongType()),
+    StructField("invalid_count", LongType()),
+    StructField("received_opcos", StringType()),
+    StructField("updated_at", LongType()),
+])
 
 
 @dataclass
@@ -62,7 +71,8 @@ class RunLedger:
             "received_opcos": received_opcos,
             "updated_at": time.time_ns(),
         }
-        self.spark.createDataFrame([tuple(row.values())], LEDGER_SCHEMA).write.mode(
+        # one job, one file per event: every later read lists them all
+        literal_rows(self.spark, [tuple(row.values())], LEDGER_SCHEMA).write.mode(
             "append"
         ).parquet(self.path)
         for notify in self.notifiers:
@@ -70,7 +80,7 @@ class RunLedger:
 
     # --- read side -------------------------------------------------------
     def events(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
 
     def current(self) -> DataFrame:
         """Latest status per (file_name, etl_timestamp) run key — the

@@ -292,3 +292,85 @@ def test_retries_exhausted_lands_in_catch(spark, workdir, monkeypatch):
         .orderBy("updated_at").collect()
     ]
     assert statuses.count("LOAD_RETRY") == 2 and statuses[-1] == "FAILED"
+
+
+def test_loadable_opcos_match_partitioned_output(spark, workdir):
+    """The opcos run_pipeline loads are read off the validation report;
+    they equal distinct(opco_id) of the partitioned write they replace."""
+    from sample_python_lambdas_glue_and_pyspark_scripts_spark import schemas as S
+    from sample_python_lambdas_glue_and_pyspark_scripts_spark.plans.orchestrate import (
+        loadable_opcos,
+    )
+    from sample_python_lambdas_glue_and_pyspark_scripts_spark.plans.price_zone import (
+        run_price_zone_transform,
+    )
+    from sample_python_lambdas_glue_and_pyspark_scripts_spark.sources.readers import (
+        read_csv_staged,
+    )
+
+    inp = f"{workdir}/in.csv"
+    with open(inp, "w") as f:
+        f.write(CSV)
+    result = run_price_zone_transform(
+        read_csv_staged(spark, inp, S.PRICE_ZONE_STAGING_SCHEMA),
+        ["019", "020", "021"],
+    )
+    out = f"{workdir}/partitioned"
+    result.output.write.partitionBy("opco_id").parquet(out)
+    written = spark.read.schema(result.output.schema).parquet(out)
+    assert loadable_opcos(result.report) == sorted(
+        r["opco_id"] for r in written.select("opco_id").distinct().collect()
+    ) == ["019", "021"]
+
+
+def test_run_pipeline_job_count_pin(spark, workdir, monkeypatch):
+    """Fast-tier pin on the Spark jobs of a partial then a full
+    run_pipeline on the 5-row fixture (local[4] test session, two opcos
+    loaded per run): 86 jobs before the load path's job diet, 41 after.
+    The diet: schema-pinned reads of the ledger, catalog, partitioned
+    output and FUTURE probe; one catalog read per catalog operation;
+    loaded opcos from the validation report; row counts and FUTURE's
+    min(effective_date) observed on the appends; one-partition
+    ledger/catalog rows.
+
+    Every parquet read also targets an existing path: absence is decided
+    with ``fs.exists``, so a run on a fresh work dir never raises (and
+    logs the stack trace of) a missing-path AnalysisException."""
+    import uuid
+
+    from pyspark.sql import DataFrameReader
+
+    from sample_python_lambdas_glue_and_pyspark_scripts_spark.sources.promote import (
+        hadoop_fs,
+    )
+
+    missing = []
+    read_parquet = DataFrameReader.parquet
+
+    def checked_parquet(self, *paths, **kw):
+        for p in paths:
+            fs, hpath = hadoop_fs(spark, p)
+            if not fs.exists(hpath(p)):
+                missing.append(p)
+        return read_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", checked_parquet)
+    inp = f"{workdir}/in.csv"
+    with open(inp, "w") as f:
+        f.write(CSV)
+    sc = spark.sparkContext
+    group = f"orchestrate-pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "run_pipeline partial + full")
+    try:
+        for kind in ("partial", "full"):
+            out = run_pipeline(spark, RunConfig(
+                input_path=inp, work_dir=f"{workdir}/engine",
+                active_opcos=["019", "020", "021"], file_name=f"ctt_{kind}.csv",
+                etl_timestamp="t30", file_type=kind,
+            ))
+            assert out.status == "SUCCEEDED" and out.loaded_opcos == ["019", "021"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert missing == []
+    assert jobs <= 41

@@ -104,3 +104,39 @@ def test_datadog_metric_name_parity(spark, ledger_path):
         },
         {"ref_price_etl.price_zone_error": 1},
     ]
+
+
+def test_one_file_per_record(spark, ledger_path):
+    """Each append writes exactly one parquet file (no empty slices), so
+    admission reads list one file per event."""
+    import os
+
+    lg = RunLedger(spark, ledger_path)
+    for i in range(3):
+        lg.record(f"f{i}", "t", f"e{i}", "RUNNING")
+    assert len([f for f in os.listdir(ledger_path) if f.endswith(".parquet")]) == 3
+    assert lg.events().count() == 3
+
+
+def test_record_round_trips_values(spark, ledger_path):
+    """Event values reach the ledger exactly as the notifiers see them:
+    quotes, backslashes and non-ASCII text, counts past 32 bits and the
+    nanosecond timestamp."""
+    seen = []
+    lg = RunLedger(spark, ledger_path, notifiers=[seen.append])
+    lg.record('it\'s "a" \\ prix-é.csv', "t", "e1", "RUNNING", total_count=2**40)
+    (row,) = lg.events().collect()
+    assert row.asDict() == seen[0]
+
+
+def test_literal_rows_rejects_mistyped_value(spark):
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from sample_python_lambdas_glue_and_pyspark_scripts_spark.operators.util import (
+        literal_rows,
+    )
+
+    schema = StructType([StructField("n", LongType())])
+    assert literal_rows(spark, [(7,), (None,)], schema).collect() == [(7,), (None,)]
+    with pytest.raises(Exception):
+        literal_rows(spark, [("seven",)], schema).collect()
