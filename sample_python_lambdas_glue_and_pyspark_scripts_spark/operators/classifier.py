@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import hashed_tf
-from .util import ensure_parallelism
+from .util import driver_frame, ensure_parallelism
 
 # r14 (guide §8; the kmeans/pq Lloyd-fit precedent): fits whose hashed
 # long-form feature table fits under this row bound run the GD loop
@@ -127,8 +127,10 @@ def _logreg_fit_driver(
         g = round6(g / n)
         w = round6(-lr * g) if w is None else round6(w - lr * g)
     spark = docs.sparkSession
-    return spark.createDataFrame(
-        [(buckets[i], float(w[i])) for i in range(nb)], "bucket BIGINT, w DOUBLE"
+    return driver_frame(
+        spark,
+        [(buckets[i], float(w[i])) for i in range(nb)],
+        "bucket BIGINT, w DOUBLE",
     )
 
 

@@ -35,6 +35,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .util import driver_frame
+
 # r14 (guide §8 "decide with small rows"): edge lists below this count
 # are contracted to the driver and solved with exact min-label
 # union-find — replacing 3-10 distributed rounds (each an eager
@@ -124,8 +126,10 @@ def connected_components(
                 [(r["u"], r["v"]) for r in edges.collect()]
             )
             spark = pairs.sparkSession
-            return spark.createDataFrame(
-                list(lab.items()), f"id {dtypes['u']}, cluster_id {dtypes['u']}"
+            return driver_frame(
+                spark,
+                list(lab.items()),
+                f"id {dtypes['u']}, cluster_id {dtypes['u']}",
             )
     labels = (
         edges.select(F.col("u").alias("id"))
@@ -304,9 +308,7 @@ def connected_components_star(
         lab = _cc_driver_labels([(r["u"], r["v"]) for r in edges.collect()])
         spark = pairs.sparkSession
         members = [(x, c) for x, c in lab.items() if x != c]
-        labels = spark.createDataFrame(
-            members, "u bigint, v bigint"
-        ) if members else spark.createDataFrame([], "u bigint, v bigint")
+        labels = driver_frame(spark, members, "u bigint, v bigint")
         labels = labels.select(
             F.col("u").alias("id"), F.col("v").alias("cluster_id")
         )

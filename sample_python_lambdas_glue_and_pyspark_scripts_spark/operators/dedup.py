@@ -62,22 +62,36 @@ def _hash120_cols(md5_hex: Column) -> list[Column]:
 # (ANSI) or DuckDB, so the oracle reproduces it exactly.
 MINHASH_PRIME = 2147483647  # 2^31 - 1
 
-def _materialize_candidates(sigs: DataFrame, cands: DataFrame) -> DataFrame:
-    """Compute the LSH candidate pairs once and truncate their lineage.
+def _materialize_candidates(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    rows_per_band: int,
+    max_bucket_size: int | None,
+    shingle_n: int = 3,
+) -> tuple[DataFrame, DataFrame]:
+    """The MinHash-LSH candidate stage: ``(signatures, candidate
+    pairs)``, each behind a lazy ``localCheckpoint``.
 
-    The verify stage references the candidate frame up to three times
-    (both sides of the id semi-join + the verify join) and Catalyst has
-    no exchange reuse across those shapes, so a lazy plan would re-run
-    the corpus-wide signature pipeline per reference.
-    ``localCheckpoint(eager=True)`` materializes the pairs into executor
-    blocks with NO persist/unpersist bookkeeping: the blocks live as
-    long as the returned frame is reachable and are GC-cleaned after —
-    no module-global cache that interleaved pipelines could evict
-    (the old FIFO's failure mode)."""
-    sigs = sigs.persist()
-    out = cands.localCheckpoint(eager=True)
-    sigs.unpersist()
-    return out
+    The band self-join reads the signatures on both sides, the verify
+    stage reads the candidates up to three times, and the estimate
+    report joins the signatures twice more; Catalyst has no exchange
+    reuse across those shapes. A lazy checkpoint makes every reference
+    share one RDD whose blocks the first job to need them computes.
+    Nothing is persisted, so nothing needs releasing on success or on
+    error; the blocks are GC-cleaned with the frames. Under adaptive
+    execution, building the checkpoints runs the shuffle stages beneath
+    them (signature repartition, band self-join, candidate distinct);
+    the rest runs with the query that reads them."""
+    sigs = minhash_signature(
+        df, text_col, id_col, num_hashes, shingle_n
+    ).localCheckpoint(eager=False)
+    cands = lsh_candidate_pairs(
+        sigs, id_col, bands, rows_per_band, max_bucket_size
+    ).localCheckpoint(eager=False)
+    return sigs, cands
 
 
 def hash30(col: Column) -> Column:
@@ -668,14 +682,15 @@ def verify_jaccard_on_candidates(
     )
     needed = df.join(cand_ids, on=id_col, how="left_semi")
     sh = needed.select(F.col(id_col), word_shingles(text_col, shingle_n).alias("sh"))
-    # r13 opt probe (guide §1.2) — measured DEAD END, left as-was: sh
-    # feeds both sides of the verify join (no subtree reuse), so the
-    # candidate-doc shingling runs twice, but an eager checkpoint here
-    # probed NEUTRAL-to-slightly-slower (alternating arms, 4 dedup
-    # reports: before 14.9 s summed mins vs after 15.7 s) — the
-    # duplicate pass fully overlaps on idle cores while the checkpoint
-    # adds a serial job boundary, and the projection is candidate-
-    # restricted (never corpus-sized) so the waste is bounded at 2x.
+    # sh feeds both sides of the verify join (no subtree reuse), so the
+    # candidate-doc shingling runs twice per execution. Left unshared on
+    # purpose: the projection is candidate-restricted (never corpus-
+    # sized), so the waste is bounded at 2x and the two passes overlap
+    # on idle cores; the corpus-sized work upstream (signatures, band
+    # join) is already shared through the candidate stage's lazy
+    # checkpoints. An EAGER checkpoint here was probed in r13 at
+    # neutral-to-slightly-slower (4 dedup reports, alternating arms:
+    # 14.9 s vs 15.7 s summed mins) — it adds a construction job.
     sh = ensure_parallelism(sh)
     sa = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
@@ -729,12 +744,9 @@ def edit_distance_pairs(
     engines; ``edit_sim`` rounds to 6dp; NULL text behaves as empty.
     """
     if candidates is None:
-        sigs = minhash_signature(df, text_col, id_col, num_hashes, shingle_n)
-        candidates = _materialize_candidates(
-            sigs,
-            lsh_candidate_pairs(
-                sigs, id_col, bands, num_hashes // bands, max_bucket_size
-            ),
+        _sigs, candidates = _materialize_candidates(
+            df, text_col, id_col, num_hashes, bands, num_hashes // bands,
+            max_bucket_size, shingle_n,
         )
     cand_ids = (
         candidates.select(F.col("a").alias(id_col))
@@ -813,12 +825,9 @@ def minhash_dedup_pairs(
     factorization of ``num_hashes`` at this ``threshold`` is used
     instead of ``bands``.
 
-    The candidate set is materialized eagerly (eager localCheckpoint —
-    see ``_materialize_candidates``): the band self-join otherwise
-    evaluates the signature expression once per side and the verify
-    stage a third time — Catalyst has no exchange reuse across these
-    shapes. Candidates are pair ids only (tiny relative to the corpus),
-    so the materialization is cheap at any scale.
+    Signatures and candidates are computed once per execution, however
+    often the plan references them (lazy checkpoints — see
+    ``_materialize_candidates``).
     """
     if isinstance(banding, DataFrame):
         banding = choose_banding(banding, num_hashes, threshold)
@@ -837,12 +846,9 @@ def minhash_dedup_pairs(
             )
     else:
         rows_per_band = num_hashes // bands
-    sigs = minhash_signature(df, text_col, id_col, num_hashes)
-    cands = _materialize_candidates(
-        sigs,
-        lsh_candidate_pairs(
-            sigs, id_col, bands, rows_per_band, max_bucket_size
-        ),
+    _sigs, cands = _materialize_candidates(
+        df, text_col, id_col, num_hashes, bands, rows_per_band,
+        max_bucket_size,
     )
     return verify_jaccard_on_candidates(
         df, cands, text_col, id_col, threshold
@@ -999,14 +1005,15 @@ def verify_containment_on_candidates(
     )
     needed = df.join(cand_ids, on=id_col, how="left_semi")
     sh = needed.select(F.col(id_col), word_shingles(text_col, shingle_n).alias("sh"))
-    # r13 opt probe (guide §1.2) — measured DEAD END, left as-was: sh
-    # feeds both sides of the verify join (no subtree reuse), so the
-    # candidate-doc shingling runs twice, but an eager checkpoint here
-    # probed NEUTRAL-to-slightly-slower (alternating arms, 4 dedup
-    # reports: before 14.9 s summed mins vs after 15.7 s) — the
-    # duplicate pass fully overlaps on idle cores while the checkpoint
-    # adds a serial job boundary, and the projection is candidate-
-    # restricted (never corpus-sized) so the waste is bounded at 2x.
+    # sh feeds both sides of the verify join (no subtree reuse), so the
+    # candidate-doc shingling runs twice per execution. Left unshared on
+    # purpose: the projection is candidate-restricted (never corpus-
+    # sized), so the waste is bounded at 2x and the two passes overlap
+    # on idle cores; the corpus-sized work upstream (signatures, band
+    # join) is already shared through the candidate stage's lazy
+    # checkpoints. An EAGER checkpoint here was probed in r13 at
+    # neutral-to-slightly-slower (4 dedup reports, alternating arms:
+    # 14.9 s vs 15.7 s summed mins) — it adds a construction job.
     sh = ensure_parallelism(sh)
     sa = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
@@ -1049,12 +1056,9 @@ def containment_pairs(
     or use span/paragraph dedup (:func:`span_dedup`) which catches
     verbatim inclusion exactly.
     """
-    sigs = minhash_signature(df, text_col, id_col, num_hashes)
-    cands = _materialize_candidates(
-        sigs,
-        lsh_candidate_pairs(
-            sigs, id_col, bands, num_hashes // bands, max_bucket_size
-        ),
+    _sigs, cands = _materialize_candidates(
+        df, text_col, id_col, num_hashes, bands, num_hashes // bands,
+        max_bucket_size,
     )
     return verify_containment_on_candidates(
         df, cands, text_col, id_col, threshold
@@ -1083,11 +1087,10 @@ def minhash_estimate_pairs(
     sharing a band but no shingle get jaccard 0 (the estimator's
     false-positive tail — visible, not silently dropped).
     """
-    sigs = minhash_signature(df, text_col, id_col, num_hashes).persist()
-    cands = lsh_candidate_pairs(
-        sigs, id_col, bands, num_hashes // bands, max_bucket_size
-    ).persist()
-    cands.count()
+    sigs, cands = _materialize_candidates(
+        df, text_col, id_col, num_hashes, bands, num_hashes // bands,
+        max_bucket_size,
+    )
     est = (
         cands.join(
             sigs.select(F.col(id_col).alias("a"), F.col("sig").alias("__sa")), "a"
@@ -1115,23 +1118,10 @@ def minhash_estimate_pairs(
     exact = verify_jaccard_on_candidates(
         df, cands, text_col, id_col, threshold=0.0, shingle_n=shingle_n
     )
-    out = (
-        est.join(exact, ["a", "b"], "left")
-        .select(
-            "a", "b", "est_jaccard",
-            F.coalesce(F.col("jaccard"), F.lit(0.0)).alias("jaccard"),
-        )
+    return est.join(exact, ["a", "b"], "left").select(
+        "a", "b", "est_jaccard",
+        F.coalesce(F.col("jaccard"), F.lit(0.0)).alias("jaccard"),
     )
-    # the plan joins `sigs` TWICE (est side); parking it in the shared
-    # FIFO cache risked eviction BEFORE the caller executed the lazy
-    # plan (two later dedup calls in one session would silently re-run
-    # the corpus signature pass). The report is candidate-pair-sized —
-    # eagerly materialize it instead, then both persisted inputs can be
-    # released immediately and deterministically.
-    out = out.localCheckpoint(eager=True)
-    cands.unpersist()
-    sigs.unpersist()
-    return out
 
 
 def decontaminate(

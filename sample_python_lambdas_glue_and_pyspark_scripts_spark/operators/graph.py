@@ -30,7 +30,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import ensure_parallelism
+from .util import driver_frame, ensure_parallelism
 
 # r14 (guide §8; the similarity.py Gram precedent): graphs whose edge
 # count fits under this bound run their fixed-round iteration (PPR,
@@ -194,7 +194,8 @@ def _ppr_driver_iterate(
         inflow = np.zeros(len(nodes), dtype=np.float64)
         np.add.at(inflow, vi, ranks[ui] * p)
         ranks = _round6(b + damping * inflow)
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         [(nodes[i], float(ranks[i])) for i in range(len(nodes))],
         f"node {node_type}, rank double",
     )
@@ -507,8 +508,8 @@ def _lpa_driver_iterate(
                 votes[lbl] = votes.get(lbl, 0) + 1
             new[node] = max(votes.items(), key=lambda kv: (kv[1], -kv[0]))[0]
         labels = new
-    return spark.createDataFrame(
-        list(labels.items()), f"node {node_type}, community {node_type}"
+    return driver_frame(
+        spark, list(labels.items()), f"node {node_type}, community {node_type}"
     )
 
 

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import ensure_parallelism, guard_quadratic
+from .util import driver_frame, ensure_parallelism, guard_quadratic
 
 # r14 (guide §8; the CC/PPR/Gram precedent applied to the Lloyd fits):
 # corpora under this row bound run kmeans_fit / pq_fit driver-side —
@@ -328,7 +328,7 @@ def cosine_topk_vectorized(
     if buf:
         blocks.append(_score_block(buf))
     if not blocks:
-        return corpus.sparkSession.createDataFrame([], out_schema)
+        return driver_frame(corpus.sparkSession, [], out_schema)
     out = blocks[0]
     for b in blocks[1:]:
         out = out.unionByName(b)
@@ -903,11 +903,12 @@ def kmeans_fit(
         )
         spark = vectors.sparkSession
         return (
-            spark.createDataFrame(
+            driver_frame(
+                spark,
                 assign_rows,
                 f"vec_id {id_t}, assigned_label INT, dist2 DOUBLE",
             ),
-            spark.createDataFrame(cent_rows, "label INT, dim INT, c DOUBLE"),
+            driver_frame(spark, cent_rows, "label INT, dim INT, c DOUBLE"),
         )
     v = ensure_parallelism(vectors).select(id_col, vec_col)
     w0 = Window.orderBy(F.col(id_col).asc())
@@ -1363,8 +1364,8 @@ def pca_power_iteration(
         )
         G = _pca_collect_gram(cw, d)
         v = _gram_power_iterate(G, d, n_iter)
-        return spark.createDataFrame(
-            [(i, v[i]) for i in range(d)], "dim INT, v DOUBLE"
+        return driver_frame(
+            spark, [(i, v[i]) for i in range(d)], "dim INT, v DOUBLE"
         )
     finally:
         base.unpersist()
@@ -1704,8 +1705,8 @@ def pca_top_components(
                     # codegen cost stays flat at higher k (the old
                     # long-form loop checkpointed each round too)
                     cw = cw.localCheckpoint(eager=False)
-        return spark.createDataFrame(
-            rows, "component INT, dim INT, v DOUBLE"
+        return driver_frame(
+            spark, rows, "component INT, dim INT, v DOUBLE"
         )
     finally:
         base.unpersist()
@@ -1995,8 +1996,8 @@ def pq_fit(
             sl = [v[s * sub_d:(s + 1) * sub_d] for v in vecs]
             _asg, cent_rows = _lloyd_driver(ids, sl, k_codes, n_iter, False)
             rows_out += [(s, lbl, dim, c) for (lbl, dim, c) in cent_rows]
-        return corpus.sparkSession.createDataFrame(
-            rows_out, "sub INT, label INT, dim INT, c DOUBLE"
+        return driver_frame(
+            corpus.sparkSession, rows_out, "sub INT, label INT, dim INT, c DOUBLE"
         )
     lf = _pq_long(corpus, id_col, vec_col, m_sub, sub_d, "vec_id")
     lf = lf.localCheckpoint(eager=False)
@@ -2806,7 +2807,7 @@ def rademacher_project(
         for j in range(out_dim)
     ]
     spark = vectors.sparkSession
-    sdf = spark.createDataFrame([(signs,)], "signs array<array<double>>")
+    sdf = driver_frame(spark, [(signs,)], "signs array<array<double>>")
     scale = float(out_dim) ** 0.5
     v = _dbl(vec_col)
     proj = F.transform(
@@ -2919,8 +2920,8 @@ def semantic_dedup_sweep(
             .localCheckpoint(eager=False)
         )
     spark = vectors.sparkSession
-    tdf = spark.createDataFrame(
-        [(float(t),) for t in sorted(thresholds)], "threshold DOUBLE"
+    tdf = driver_frame(
+        spark, [(float(t),) for t in sorted(thresholds)], "threshold DOUBLE"
     )
     total = labeled.agg(F.count(F.lit(1)).cast("bigint").alias("n_total"))
     dropped = (

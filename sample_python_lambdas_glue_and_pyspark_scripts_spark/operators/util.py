@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import numbers
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +33,53 @@ def literal_rows(spark: SparkSession, rows: list[tuple], schema: StructType) -> 
     doc = json.dumps([dict(zip(schema.fieldNames(), row)) for row in rows])
     parsed = F.from_json(F.lit(doc), ArrayType(schema), {"mode": "FAILFAST"})
     return spark.range(0, 1, 1, 1).select(F.inline(parsed))
+
+
+def driver_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """Rows computed on the driver (the output of a driver contraction:
+    k-means/PQ/PCA fits, union-find labels, PageRank, logistic-regression
+    weights, small lookup tables) as a DataFrame that reaches the JVM as
+    Arrow record batches — a local relation, so executing it never starts
+    a Python worker, whatever the session's Arrow confs say.
+
+    Each column is built as a typed ``pa.array`` from
+    ``to_arrow_schema(schema)``: a value of the wrong type raises here,
+    NaN stays NaN and None stays null. ``schema`` is a ``StructType`` or
+    a DDL string.
+
+    Which helper for which job:
+    - ``driver_frame``: driver-computed rows that a query goes on to
+      join or aggregate. Its cost grows with the Arrow bytes only.
+    - ``literal_rows``: a handful of control rows that are WRITTEN
+      (ledger, catalog), where one partition and one file per append
+      matter.
+    - ``spark.createDataFrame(list)``: avoid for query data — in classic
+      PySpark it wraps ``parallelize`` in a PythonRDD, so every execution
+      pays a Python-worker round trip.
+    Build + noop write, local[2] on a 4-vCPU host: 46 ms for 500 rows and
+    118 ms for 20k, against 264 ms and 327 ms for
+    ``createDataFrame(list)``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    for c, f in zip(cols, arrow_schema):
+        # pa.array would truncate a float into an integer type silently
+        if pa.types.is_integer(f.type):
+            bad = [x for x in c if x is not None and not isinstance(x, numbers.Integral)]
+            if bad:
+                raise TypeError(f"driver_frame: {f.name} is {f.type}, got {bad[0]!r}")
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -1,0 +1,87 @@
+"""``operators.util.driver_frame``: the Arrow-backed primitive that every
+driver contraction returns its rows through."""
+
+import math
+
+import pytest
+
+from sample_python_lambdas_glue_and_pyspark_scripts_spark.operators.util import (
+    driver_frame,
+)
+
+_SCHEMA = (
+    "a bigint, i int, d double, s string, v array<double>, "
+    "m array<array<double>>"
+)
+_ROWS = [
+    (1, 2, 0.5, "x", [1.0, 2.5], [[1.0], [2.0, 3.0]]),
+    (2**40, -7, -1e300, "", [], []),
+    (None, None, None, None, None, None),
+    (3, 0, 1.25, "é\\\"q", [None, 4.0], [None, [5.0]]),
+]
+
+
+def _rdd_lineage(df) -> str:
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_rows_and_schema_equal_create_dataframe(spark):
+    got = driver_frame(spark, _ROWS, _SCHEMA)
+    ref = spark.createDataFrame(_ROWS, _SCHEMA)
+    assert got.schema == ref.schema
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, ref.collect()), key=repr
+    )
+
+
+def test_empty_rows(spark):
+    got = driver_frame(spark, [], _SCHEMA)
+    assert got.schema == spark.createDataFrame([], _SCHEMA).schema
+    assert got.collect() == []
+
+
+def test_nan_stays_nan_and_none_stays_null(spark):
+    got = driver_frame(
+        spark, [(1, float("nan"), [float("nan")]), (2, None, [None])],
+        "k int, x double, v array<double>",
+    )
+    rows = {r["k"]: r for r in got.collect()}
+    assert math.isnan(rows[1]["x"]) and math.isnan(rows[1]["v"][0])
+    assert rows[2]["x"] is None and rows[2]["v"] == [None]
+    # Spark sees NaN as a value, not as null
+    assert got.filter("x is null").count() == 1
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([("x",)], "a bigint"),
+        ([(1.5,)], "a bigint"),
+        ([("1.0",)], "d double"),
+        ([([1.0, "y"],)], "v array<double>"),
+    ],
+)
+def test_mistyped_value_raises(spark, rows, schema):
+    with pytest.raises(Exception):
+        driver_frame(spark, rows, schema)
+
+
+def test_works_with_arrow_conf_off(spark):
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = driver_frame(spark, _ROWS, _SCHEMA)
+        assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+            map(tuple, spark.createDataFrame(_ROWS, _SCHEMA).collect()), key=repr
+        )
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_no_python_worker_in_lineage(spark):
+    got = driver_frame(spark, _ROWS, _SCHEMA).groupBy("i").count()
+    assert "PythonRDD" not in _rdd_lineage(got)
+    # the path it replaces does carry one
+    ref = spark.createDataFrame(_ROWS, _SCHEMA).groupBy("i").count()
+    assert "PythonRDD" in _rdd_lineage(ref)

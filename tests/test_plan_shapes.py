@@ -220,11 +220,14 @@ def test_pagerank_no_cartesian_no_python(spark, sf_dir):
         .withColumnRenamed("count", "w")
     )
     ranks = GR.pagerank(edges, "src", "dst", "w", n_iter=2)
-    # result is an eager local checkpoint: downstream plans read the
-    # cached rank RDD (scan-free), and the whole fit stayed JVM-side
+    # the small graph contracts to the driver: downstream plans read the
+    # ranks as a local relation (util.driver_frame), with no file
+    # re-scan after the fit and no Python worker behind the rows
     plan = _fmt_plan(spark, ranks)
-    assert "Scan ExistingRDD" in plan
+    assert "LocalTableScan" in plan
     assert "Location:" not in plan  # no file re-scan after the fit
+    lineage = ranks._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
 
 
 def test_bm25_plan_shape(spark, sf_dir):

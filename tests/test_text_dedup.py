@@ -862,6 +862,47 @@ def test_minhash_estimate_tracks_exact_jaccard(spark):
         assert abs(r["est_jaccard"] - r["jaccard"]) <= 0.5  # k=16 band
 
 
+def test_minhash_estimate_leaves_no_cached_frame(spark, docs, monkeypatch):
+    """The candidate stage persists nothing, so neither a finished
+    report nor a step that raises mid-build leaves a frame in the
+    session's cache (the old persist/count/unpersist sequence had no
+    try/finally and leaked both frames on an error)."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # frames other tests left in the session
+    assert cache.isEmpty()
+    assert D.minhash_estimate_pairs(docs).count() > 0
+    assert cache.isEmpty()
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("verify failed")
+
+    monkeypatch.setattr(D, "verify_jaccard_on_candidates", boom)
+    with pytest.raises(RuntimeError, match="verify failed"):
+        D.minhash_estimate_pairs(docs)
+    assert cache.isEmpty()
+
+
+def test_minhash_estimate_construction_job_count_pin(spark, docs):
+    """Fast-tier pin on the Spark jobs that BUILDING the estimate report
+    runs on the 6-doc fixture (local[4] test session): 21-22 before the
+    candidate stage moved to lazy checkpoints (persist + count of the
+    candidates, then an eager checkpoint of the report), 3 after — the
+    adaptive-execution shuffle stages under the two lazy checkpoints
+    (signature repartition, band self-join, candidate distinct)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"minhash-estimate-pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "minhash_estimate_pairs construction")
+    try:
+        out = D.minhash_estimate_pairs(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 3
+    assert {(r["a"], r["b"]) for r in out.collect()} >= {(1, 2), (1, 3), (2, 3)}
+
+
 def test_bm25_hand_computed(spark):
     import math
 
