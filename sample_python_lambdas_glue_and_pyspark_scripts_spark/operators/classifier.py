@@ -23,25 +23,20 @@ counts.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import hashed_tf
-from .util import driver_frame, ensure_parallelism
+from .util import collect_if_small, driver_frame, ensure_parallelism
 
 # r14 (guide §8; the kmeans/pq Lloyd-fit precedent): fits whose hashed
-# long-form feature table fits under this row bound run the GD loop
-# driver-side — the feature hashing still happens in Spark (the
-# collect pulls the hashed (id, bucket, tf) rows), gradients/weights
-# round 6dp per iteration via the pinned HALF_UP twin, and σ lives in
-# the same ≤1-ulp exp band the Spark↔DuckDB contract already tolerates
-# under the gradient round. Over-the-bound corpora keep the
-# distributed loop (the limit-probe short-circuits their scan).
-_LOGREG_DRIVER_MAX_FEATURE_ROWS = int(
-    os.environ.get("SPARK_GRAFT_LOGREG_DRIVER_MAX_FEATURE_ROWS", "1000000")
-)
+# long-form feature table fits under the driver bound
+# (``util.collect_if_small``) run the GD loop driver-side — the feature
+# hashing still happens in Spark (the collect pulls the hashed (id,
+# bucket, tf) rows), gradients/weights round 6dp per iteration via the
+# pinned HALF_UP twin, and σ lives in the same ≤1-ulp exp band the
+# Spark↔DuckDB contract already tolerates under the gradient round.
+# Over-the-bound corpora keep the distributed loop.
 
 #: bias term lives in a reserved slot below the hash range so every doc
 #: (even one with no tokens) has at least one feature row
@@ -87,19 +82,21 @@ def _logreg_fit_driver(
 
     from .similarity import _np_round_half_up_like_spark
 
-    frows = (
-        logreg_features(docs, text_col, id_col, dim)
-        .limit(_LOGREG_DRIVER_MAX_FEATURE_ROWS + 1)
-        .collect()
+    # the narrow (id, label) rows first: every doc has a bias feature
+    # row, so more docs than the bound means more feature rows too — an
+    # over-the-bound corpus falls through before any tokenize+hash
+    # shuffle runs
+    lrows = collect_if_small(
+        docs.select(
+            F.col(id_col).alias("__id"),
+            F.col(label_col).cast("double").alias("__y"),
+        )
     )
-    if len(frows) > _LOGREG_DRIVER_MAX_FEATURE_ROWS:
-        return None
-    lrows = docs.select(
-        F.col(id_col).alias("__id"),
-        F.col(label_col).cast("double").alias("__y"),
-    ).collect()
     if not lrows or any(r["__y"] is None for r in lrows):
-        return None  # empty/NULL-label inputs keep the distributed form
+        return None  # over the bound, empty or NULL labels: distributed form
+    frows = collect_if_small(logreg_features(docs, text_col, id_col, dim))
+    if frows is None:
+        return None
     ids = [r["__id"] for r in lrows]
     idx = {x: i for i, x in enumerate(ids)}
     y = np.array([r["__y"] for r in lrows], dtype=np.float64)

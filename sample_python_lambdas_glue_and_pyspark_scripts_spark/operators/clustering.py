@@ -30,26 +30,19 @@ min-reachable-id per vertex (__spark_entry__ `dedup_clusters`).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .util import driver_frame
+from .util import collect_if_small, driver_frame
 
-# r14 (guide §8 "decide with small rows"): edge lists below this count
-# are contracted to the driver and solved with exact min-label
+# r14 (guide §8 "decide with small rows"): edge lists under the driver
+# bound (``util.collect_if_small``) are solved with exact min-label
 # union-find — replacing 3-10 distributed rounds (each an eager
 # checkpoint job + a convergence-check job) with ZERO Spark jobs after
 # the (already required) edge materialization. Near-dup pair lists are
 # tiny relative to the corpus at every scale (sf0.1: 256 edges; a
 # 100 TB corpus with billions of dup edges takes the distributed loop
-# unchanged). 1M edges ≈ 32 MB of bigints on the driver — the same
-# class as the broadcast relations the engine already collects.
-_CC_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "1000000")
-)
-
+# unchanged).
 _CC_DRIVER_OK_TYPES = ("bigint", "int", "smallint", "tinyint")
 
 
@@ -112,19 +105,17 @@ def connected_components(
         .localCheckpoint()
     )
     # r14 size-adaptive contraction (guide §8): the checkpoint above
-    # already materialized the edge list, so its count is free; tiny
-    # graphs (the common near-dup case at EVERY corpus scale — the pair
-    # list is dup-structure-sized, not corpus-sized) solve exactly on
-    # the driver instead of paying diameter× (checkpoint + count) jobs.
-    # Integral id types only: Python/Spark orderings agree on ints;
-    # strings would need collation care, so they keep the loop.
+    # already materialized the edge list, so collecting it is cheap;
+    # tiny graphs (the common near-dup case at EVERY corpus scale — the
+    # pair list is dup-structure-sized, not corpus-sized) solve exactly
+    # on the driver instead of paying diameter× (checkpoint + count)
+    # jobs. Integral id types only: Python/Spark orderings agree on
+    # ints; strings would need collation care, so they keep the loop.
     dtypes = dict(edges.dtypes)
     if dtypes["u"] == dtypes["v"] and dtypes["u"] in _CC_DRIVER_OK_TYPES:
-        n_edges = edges.count()
-        if n_edges <= _CC_DRIVER_MAX_EDGES:
-            lab = _cc_driver_labels(
-                [(r["u"], r["v"]) for r in edges.collect()]
-            )
+        rows = collect_if_small(edges)
+        if rows is not None:
+            lab = _cc_driver_labels([(r["u"], r["v"]) for r in rows])
             spark = pairs.sparkSession
             return driver_frame(
                 spark,
@@ -303,9 +294,9 @@ def connected_components_star(
     # (2 jobs each) with an exact driver-side union-find for edge lists
     # that are tiny at any corpus scale. The distributed loop below is
     # unchanged for large graphs.
-    n_edges = edges.count()
-    if n_edges <= _CC_DRIVER_MAX_EDGES:
-        lab = _cc_driver_labels([(r["u"], r["v"]) for r in edges.collect()])
+    rows = collect_if_small(edges)
+    if rows is not None:
+        lab = _cc_driver_labels([(r["u"], r["v"]) for r in rows])
         spark = pairs.sparkSession
         members = [(x, c) for x, c in lab.items() if x != c]
         labels = driver_frame(spark, members, "u bigint, v bigint")

@@ -25,25 +25,10 @@ small.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import driver_frame, ensure_parallelism
-
-# r14 (guide §8; the similarity.py Gram precedent): graphs whose edge
-# count fits under this bound run their fixed-round iteration (PPR,
-# LPA) driver-side — Spark still computes the transition probabilities and
-# teleport base (so w/Σw and every pre-iteration 6dp round keep their
-# exact engine arithmetic); only the iteration's multiply-add-round
-# moves to the driver, replacing n_iter unrolled join+aggregate stages
-# and their serial materialization jobs with zero Spark jobs. 1M edges
-# ≈ a few tens of MB collected — the broadcast-relation class. Large
-# graphs take the distributed loop unchanged.
-_GRAPH_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_MAX_EDGES", "1000000")
-)
+from .util import collect_if_small, driver_frame, ensure_parallelism
 
 
 def _round6(x):
@@ -95,40 +80,46 @@ def pagerank(
     )
     trans = None
     try:
-        n = nodes.count()
-        if n == 0:
-            raise ValueError("pagerank: empty edge table")
         # per-source transition probabilities: one groupBy + join back
-        # (out-degree tables are node-sized, not edge-sized)
+        # (out-degree tables are node-sized, not edge-sized); persisted
+        # before the size probe, so the partitions the probe reads stay
+        # cached for the loop
         outw = e.groupBy("__u").agg(F.sum("__w").alias("__ow"))
-        trans_expr = (
+        trans = (
             e.join(outw, "__u")
             .select(
                 "__u", "__v",
                 F.round(F.col("__w") / F.col("__ow"), 6).alias("__p"),
             )
+            .persist()
         )
-        # r14 driver contraction — same branch as personalized_pagerank
-        # (nodes.count() above already materialized the e cache, so the
-        # edge count is one cheap aggregate); uniform base/start are
-        # the same 6dp rounds via the pinned HALF_UP twin of F.round
-        n_edges = e.count()
-        if n_edges <= _GRAPH_DRIVER_MAX_EDGES:
+        # r14 driver contraction — same branch as personalized_pagerank;
+        # uniform base/start are the same 6dp rounds via the pinned
+        # HALF_UP twin of F.round
+        trans_rows = collect_if_small(trans)
+        if trans_rows is not None:
+            node_rows = nodes.collect()
+            n = len(node_rows)
+        else:
+            # fills the nodes and e caches the loop references
+            n = nodes.count()
+        if n == 0:
+            raise ValueError("pagerank: empty edge table")
+        if trans_rows is not None:
             r1n = float(_round6(1.0 / n))
             b0 = float(_round6((1.0 - damping) / n))
             base_rows = [
                 {"node": r["node"], "__p0": r1n, "__b": b0}
-                for r in nodes.collect()
+                for r in node_rows
             ]
             return _ppr_driver_iterate(
                 edges.sparkSession,
-                trans_expr.collect(),
+                trans_rows,
                 base_rows,
                 n_iter,
                 damping,
                 dict(nodes.dtypes)["node"],
             )
-        trans = trans_expr.persist()
         # HALF_UP via F.round, never Python round() (banker's) — the
         # parity-kit rule for every literal that reaches a comparison
         base = F.round(F.lit((1.0 - damping) / n), 6)
@@ -261,6 +252,10 @@ def personalized_pagerank(
             "personalized_pagerank: seed nodes must be non-NULL with "
             "positive non-NULL weights"
         )
+    # p0 holds exactly the distinct seed nodes, so the node table reads
+    # them off the raw seeds: no groupBy, cross join or broadcast (three
+    # jobs) under the nodes cache
+    seed_nodes = sd.select("node")
     sd = sd.groupBy("node").agg(F.sum("__sw").alias("__sw"))
     w = (
         F.col(weight_col).cast("double")
@@ -286,23 +281,22 @@ def personalized_pagerank(
     nodes = (
         e.select(F.col("__u").alias("node"))
         .union(e.select(F.col("__v").alias("node")))
-        .union(p0.select("node"))
+        .union(seed_nodes)
         .distinct()
         .persist()
     )
     trans = None
     basev = None
     try:
-        # materialize the e cache first (an aggregate-only job — no
-        # data to the driver); its count is the size-adaptive branch
-        n_edges = e.count()
+        # persisted before the size probe (the pagerank pattern)
         outw = e.groupBy("__u").agg(F.sum("__w").alias("__ow"))
-        trans_expr = (
+        trans = (
             e.join(outw, "__u")
             .select(
                 "__u", "__v",
                 F.round(F.col("__w") / F.col("__ow"), 6).alias("__p"),
             )
+            .persist()
         )
         # per-node teleport base (1-d)*p_seed, 0 off-seed; carried with
         # the node table so every iteration is one extra column, not an
@@ -319,7 +313,8 @@ def personalized_pagerank(
                 ).alias("__b"),
             )
         )
-        if n_edges <= _GRAPH_DRIVER_MAX_EDGES:
+        trans_rows = collect_if_small(trans)
+        if trans_rows is not None:
             # r14 driver contraction: SPARK computed every
             # pre-iteration quantity above (w/Σw transition probs, the
             # 6dp-rounded seed distribution and teleport base), so the
@@ -331,18 +326,18 @@ def personalized_pagerank(
             # iteration instead of an unrolled join+aggregate chain.
             return _ppr_driver_iterate(
                 seeds.sparkSession,
-                trans_expr.collect(),
+                trans_rows,
                 basev_expr.collect(),
                 n_iter,
                 damping,
                 dict(nodes.dtypes)["node"],
             )
-        trans = trans_expr.persist()
         basev = basev_expr.persist()
         # basev is referenced by EVERY iteration of the unrolled loop —
         # an unmaterialized cache gets recomputed per reference inside
-        # the one big final job (nodes.count() above cannot reach it);
-        # node-sized, so the extra action is cheap
+        # the one big final job. Its count also fills the nodes cache;
+        # the probe above filled e (outw reads all of it) and the trans
+        # partitions it read. Node-sized, so the extra action is cheap
         basev.count()
         ranks = basev.select("node", F.col("__p0").alias("rank"))
         for _ in range(n_iter):
@@ -562,21 +557,22 @@ def label_propagation(
         # r14 driver contraction (guide §8; the CC/PPR pattern): LPA is
         # INTEGER-exact (vote counts, smallest-label tie-break), so the
         # driver twin is arithmetic-identical, not merely
-        # tolerance-equal. The canonical edge list is already
-        # materialized by the count; small graphs skip n_iter unrolled
+        # tolerance-equal; small graphs skip n_iter unrolled
         # join+aggregate rounds entirely.
         dtypes = dict(e.dtypes)
         if dtypes["u"] == dtypes["v"] and dtypes["u"] in (
             "bigint", "int", "smallint", "tinyint"
         ):
-            n_edges = e.count()
-            if n_edges <= _GRAPH_DRIVER_MAX_EDGES:
+            rows = collect_if_small(e)
+            if rows is not None:
                 return _lpa_driver_iterate(
                     edges.sparkSession,
-                    [(r["u"], r["v"]) for r in e.collect()],
+                    [(r["u"], r["v"]) for r in rows],
                     n_iter,
                     dtypes["u"],
                 )
+        # every round references e: fill its cache before the loop
+        e.count()
         both = e.select("u", "v").union(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )

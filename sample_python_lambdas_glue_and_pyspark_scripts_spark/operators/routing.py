@@ -51,11 +51,3 @@ def set_difference(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
         .distinct()
         .join(broadcast(right.select(on).distinct()), on=on, how="left_anti")
     )
-
-
-def correlate_runs(
-    state: DataFrame, ledger: DataFrame, keys: tuple[str, str] = ("file_name", "etl_timestamp")
-) -> DataFrame:
-    """J5: equi-join on the (file_name, etl_timestamp) composite run key
-    (AnalyzeEtlWaitStatusLambda/index.py:12)."""
-    return state.join(ledger, on=list(keys), how="inner")

@@ -348,49 +348,6 @@ def packing_efficiency_report(
     )
 
 
-def split_dataset(
-    df: DataFrame,
-    key_col: str,
-    weights: dict[str, float],
-    seed: str = "split|",
-    out_col: str = "split",
-) -> DataFrame:
-    """Deterministic named dataset splits (train/valid/test): adds
-    ``out_col`` with the split name chosen by the row's hash bucket
-    against cumulative weight thresholds. The same contract as
-    ``hash_sample`` — the seed is the RNG state, membership is a pure
-    function of the key, and splits are disjoint and exhaustive.
-
-    Two properties the naive randomSplit lacks:
-    - stable under data growth: a row keeps its split when the corpus
-      is extended (no leakage of yesterday's train rows into today's
-      test set);
-    - derivable anywhere: any job can recompute membership from the key
-      alone — no stored membership table to join against.
-
-    Pure map-side projection (a CASE over one md5 bucket) — composes
-    with scan pushdown, no shuffle.
-    """
-    if not weights or any(w < 0 for w in weights.values()):
-        raise ValueError("weights must be non-negative and non-empty")
-    total = sum(weights.values())
-    if total <= 0:
-        raise ValueError("weights must sum to a positive value")
-    bucket = hash_bucket(F.col(key_col).cast("string"), seed=seed)
-    expr = None
-    acc = 0.0
-    names = list(weights)
-    for name in names[:-1]:
-        acc += weights[name] / total
-        cond = bucket < int(acc * BUCKETS)
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(
-            cond, F.lit(name)
-        )
-    last = F.lit(names[-1])
-    expr = last if expr is None else expr.otherwise(last)
-    return df.withColumn(out_col, expr)
-
-
 def select_token_budget(
     df: DataFrame,
     budget: int,

@@ -17,26 +17,26 @@ bit-comparable with a DuckDB oracle using
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import driver_frame, ensure_parallelism, guard_quadratic
+from . import util
+from .util import (
+    collect_if_small,
+    driver_frame,
+    ensure_parallelism,
+    guard_quadratic,
+)
 
 # r14 (guide §8; the CC/PPR/Gram precedent applied to the Lloyd fits):
-# corpora under this row bound run kmeans_fit / pq_fit driver-side —
-# the fits make their discrete decisions (argmin, tie-break) on
-# 6dp-ROUNDED distances and emit 6dp-rounded means, so the driver twin
-# reproduces the same values under the contract's existing sum-order
-# tolerance (the per-dim fold is replicated in the exact left-to-right
-# order of the Spark aggregate). Inputs with NULL/ragged vectors or
-# non-integral ids fall through to the distributed loops unchanged, as
-# does anything over the bound (100k×64 doubles ≈ 51 MB collected —
-# the broadcast-relation class).
-_KMEANS_DRIVER_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_MAX_ROWS", "100000")
-)
+# small corpora run kmeans_fit / pq_fit driver-side — the fits make
+# their discrete decisions (argmin, tie-break) on 6dp-ROUNDED distances
+# and emit 6dp-rounded means, so the driver twin reproduces the same
+# values under the contract's existing sum-order tolerance (the per-dim
+# fold is replicated in the exact left-to-right order of the Spark
+# aggregate). Inputs with NULL/ragged vectors or non-integral ids fall
+# through to the distributed loops unchanged, as does anything over the
+# bound (``_collect_vectors_bounded``).
 
 
 def _dbl(col: Column | str) -> Column:
@@ -761,25 +761,22 @@ def assign_nearest_centroid(
     )
 
 
-def _collect_vectors_bounded(
-    df: DataFrame, id_col: str, vec_col: str, max_rows: int
-):
+def _collect_vectors_bounded(df: DataFrame, id_col: str, vec_col: str):
     """Driver-contraction probe: collect ``(id, double-vector)`` rows
-    iff the input fits under ``max_rows`` (limit max_rows+1 — Spark
-    short-circuits the scan, so an over-the-bound corpus pays a few
-    partitions, not a full pass), ids are integral, and every vector is
-    non-NULL, uniform-width, with no NULL elements. Returns
-    ``(ids, vecs, d, id_type)`` or None (caller falls through to the
-    distributed form)."""
+    iff the input fits under the bound (``util.collect_if_small``), ids
+    are integral, and every vector is non-NULL, uniform-width, with no
+    NULL elements. Returns ``(ids, vecs, d, id_type)`` or None (caller
+    falls through to the distributed form)."""
     t = dict(df.dtypes).get(id_col)
     if t not in ("tinyint", "smallint", "int", "bigint"):
         return None
-    rows = (
-        df.select(F.col(id_col).alias("__id"), _dbl(vec_col).alias("__v"))
-        .limit(max_rows + 1)
-        .collect()
+    rows = collect_if_small(
+        df.select(F.col(id_col).alias("__id"), _dbl(vec_col).alias("__v")),
+        # a tenth of the row bound: each row carries a d-vector
+        # (100k×64 doubles ≈ 51 MB, the class of 1M edges)
+        util.DRIVER_CONTRACT_MAX_ROWS // 10,
     )
-    if len(rows) > max_rows:
+    if rows is None:
         return None
     ids, vecs, d = [], [], None
     for r in rows:
@@ -893,9 +890,7 @@ def kmeans_fit(
     the whole history (see operators/clustering.py for the same
     pattern).
     """
-    got = _collect_vectors_bounded(
-        vectors, id_col, vec_col, _KMEANS_DRIVER_MAX_ROWS
-    )
+    got = _collect_vectors_bounded(vectors, id_col, vec_col)
     if got is not None:
         ids, vecs, _d, id_t = got
         assign_rows, cent_rows = _lloyd_driver(
@@ -1986,9 +1981,7 @@ def pq_fit(
     # label)); round6(avg) M-step), so each subspace runs the same
     # kernel on its dim slice. Over-the-bound / NULL / ragged corpora
     # fall through to the distributed loop unchanged.
-    got = _collect_vectors_bounded(
-        corpus, id_col, vec_col, _KMEANS_DRIVER_MAX_ROWS
-    )
+    got = _collect_vectors_bounded(corpus, id_col, vec_col)
     if got is not None:
         ids, vecs, _d, _t = got
         rows_out = []

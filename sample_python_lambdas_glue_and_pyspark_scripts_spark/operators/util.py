@@ -4,14 +4,39 @@ from __future__ import annotations
 
 import json
 import numbers
+import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
 
 # Inputs smaller than cores x this are "small": a full repartition costs
 # less than leaving any core idle on a compute-heavy stage.
 SMALL_INPUT_BYTES_PER_CORE = 64 * 1024 * 1024
+
+# The one size bound of every driver contraction (CC, star, PageRank,
+# PPR, LPA, logreg; k-means and PQ take a tenth of it): inputs with at
+# most this many rows are collected and solved on the driver, larger
+# ones take the operator's distributed loop. 1M bigint edge pairs is
+# ~32 MB on the driver — the class of the broadcast relations the engine
+# already collects. 0 sends every non-empty input to the distributed loop.
+DRIVER_CONTRACT_MAX_ROWS = int(
+    os.environ.get("SPARK_GRAFT_DRIVER_CONTRACT_MAX_ROWS", "1000000")
+)
+
+
+def collect_if_small(df: DataFrame, max_rows: int | None = None) -> list[Row] | None:
+    """The rows of ``df`` if there are at most ``max_rows`` of them
+    (default ``DRIVER_CONTRACT_MAX_ROWS``), else None — the input side of
+    a driver contraction. One ``limit(max_rows + 1).collect()``: Spark
+    stops scanning partitions once the limit is reached, so an input over
+    the bound costs a few partitions rather than a full pass, and one
+    under it costs one collect with no separate ``count()``. Rows come
+    back in partition order, the order a plain ``collect()`` returns."""
+    if max_rows is None:
+        max_rows = DRIVER_CONTRACT_MAX_ROWS
+    rows = df.limit(max_rows + 1).collect()
+    return None if len(rows) > max_rows else rows
 
 
 def estimated_size_bytes(df: DataFrame) -> int:
@@ -50,6 +75,8 @@ def driver_frame(
     a DDL string.
 
     Which helper for which job:
+    - ``collect_if_small``: the way in — a contraction's input rows, or
+      None when the input is over the bound and the distributed loop runs.
     - ``driver_frame``: driver-computed rows that a query goes on to
       join or aggregate. Its cost grows with the Arrow bytes only.
     - ``literal_rows``: a handful of control rows that are WRITTEN
@@ -120,7 +147,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 # correct, but quadratic. Above this row count the quadratic plan is not
 # runnable in practice and the guard refuses to build it.
 QUADRATIC_GUARD_ROWS = int(
-    __import__("os").environ.get("SPARK_GRAFT_QUADRATIC_GUARD_ROWS", "200000")
+    os.environ.get("SPARK_GRAFT_QUADRATIC_GUARD_ROWS", "200000")
 )
 
 

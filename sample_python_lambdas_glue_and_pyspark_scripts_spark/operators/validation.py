@@ -358,14 +358,6 @@ def validate_date_format(
     return _groups_where(df, Rule("x", column, "regex", {"pattern": pattern}), group_col)
 
 
-def validate_date_time_field(
-    df: DataFrame, column: str, group_col: str = "opco_id"
-) -> list:
-    """F7 compat shim: groups where the already-parsed timestamp is null
-    (reference: validator.py:82-90)."""
-    return _groups_where(df, Rule("x", column, "not_null"), group_col)
-
-
 def _groups_where(df: DataFrame, rule: Rule, group_col: str) -> list:
     rows = (
         df.filter(rule.invalid_condition())

@@ -110,12 +110,6 @@ def plan_load(
     )
 
 
-def catalog_lookup(tables: list[dict], table_type: str) -> list[str]:
-    """S8 analog: SELECT TABLE_NAMES FROM PRICE_ZONE_MASTER_DATA WHERE
-    TABLE_TYPE=… (load_job.py:163-181) over an in-engine catalog."""
-    return [t["table_name"] for t in tables if t["table_type"] == table_type]
-
-
 CATALOG_SCHEMA = StructType([
     StructField(c, StringType())
     for c in ("opco_id", "table_type", "table_name", "effective_date")

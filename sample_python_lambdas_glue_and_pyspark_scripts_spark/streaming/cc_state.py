@@ -38,10 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.clustering import extend_components
-from .incremental import run_incremental
 
 _CC_EDGES_SCHEMA = "a bigint, b bigint"
 _CC_LABELS_SCHEMA = "id bigint, cluster_id bigint"
@@ -102,24 +100,6 @@ def make_cc_batch_fn(work_dir: str, src: str = "a", dst: str = "b"):
         )
 
     return batch_fn
-
-
-def streaming_cc(
-    stream_df: DataFrame,
-    work_dir: str,
-    src: str = "a",
-    dst: str = "b",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Maintain live duplicate-cluster labels over an edge stream (the
-    pair output of an intake index probe). See the module docstring for
-    the state contract."""
-    return run_incremental(
-        stream_df,
-        make_cc_batch_fn(work_dir, src, dst),
-        f"{work_dir}/ckpt",
-        available_now=available_now,
-    )
 
 
 def read_cc_state(spark: SparkSession, work_dir: str) -> DataFrame:

@@ -467,38 +467,6 @@ def make_kll_batch_fn(work_dir: str, val_col: str, k: int = 512, n_blocks: int =
     return batch_fn
 
 
-def streaming_kll(
-    stream_df: DataFrame,
-    work_dir: str,
-    val_col: str,
-    k: int = 512,
-    n_blocks: int = 16,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Maintain a live BOUNDED-ERROR quantile sketch over a stream —
-    the guaranteed-rank-error member of the streaming sketch family
-    (``streaming_bottomk_values`` is its probabilistic uniform-sample
-    sibling): per epoch one ``operators.kll.kll_sketch`` over the batch
-    (O(k·log) rows written; the build is canonical, so a replayed epoch
-    rewrites its own dir with IDENTICAL content — replay-idempotent by
-    determinism, not just by layout). Serve with
-    ``operators.kll.kll_quantiles`` over :func:`read_kll_state`; the
-    merged state's ``err_budget`` still bounds the true rank error over
-    everything the stream has seen (the KLL merge error contract —
-    literal state equality with a one-shot batch build is
-    information-theoretically unavailable for compacting quantile
-    summaries; see operators/kll.py). Retraction: the state is a lossy
-    fold of unkeyed values — route through
-    ``state_retraction.rebuild_sketch_epoch`` (replay the hit epoch's
-    survivors), the documented path for lossy-fold sketches."""
-    return run_incremental(
-        stream_df,
-        make_kll_batch_fn(work_dir, val_col, k, n_blocks),
-        f"{work_dir}/ckpt",
-        available_now=available_now,
-    )
-
-
 def read_kll_state(
     spark: SparkSession, work_dir: str, k: int = 512
 ) -> DataFrame:

@@ -60,22 +60,3 @@ def test_logreg_weight_table_shape_and_errors(spark):
         CL.logreg_fit(df, "y", n_iter=0)
     with pytest.raises(ValueError):
         CL.logreg_fit(df, "y", dim=0)
-
-
-def test_logreg_driver_contraction_equals_distributed_loop(spark, monkeypatch):
-    """r14: small fits run the GD loop driver-side; the weight table
-    must match the distributed unrolled loop exactly (multi-iteration,
-    lr != 1)."""
-    from sample_python_lambdas_glue_and_pyspark_scripts_spark.operators import (
-        classifier as CL,
-    )
-
-    rows = [
-        (i, f"alpha beta doc {i} " + ("good text " * (i % 5)), float(i % 2))
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING, y DOUBLE")
-    driver = {tuple(r) for r in CL.logreg_fit(df, "y", dim=32, n_iter=3, lr=2.0).collect()}
-    monkeypatch.setattr(CL, "_LOGREG_DRIVER_MAX_FEATURE_ROWS", -1)
-    loop = {tuple(r) for r in CL.logreg_fit(df, "y", dim=32, n_iter=3, lr=2.0).collect()}
-    assert driver == loop

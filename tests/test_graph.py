@@ -431,69 +431,3 @@ def test_personalized_pagerank_guards(spark):
         GR.personalized_pagerank(
             edges, spark.createDataFrame([(1,)], "node INT"), n_iter=0
         )
-
-
-def test_ppr_driver_contraction_equals_distributed_loop(spark, monkeypatch):
-    """r14: small graphs iterate driver-side off Spark-computed
-    transition/base tables; ranks must be IDENTICAL to the distributed
-    unrolled loop (weighted edges, weighted seeds, dangling node,
-    unreachable component)."""
-    edges = spark.createDataFrame(
-        [(1, 2, 3.0), (2, 3, 1.0), (3, 1, 2.0), (3, 4, 1.0),
-         (4, 5, 1.0), (10, 11, 1.0), (11, 10, 2.0)],
-        "src INT, dst INT, w DOUBLE",
-    )
-    seeds = spark.createDataFrame([(1, 2.0), (3, 1.0)], "node INT, sw DOUBLE")
-    kw = dict(weight_col="w", seed_weight_col="sw", n_iter=4)
-    driver = {
-        (r["node"], r["rank"])
-        for r in GR.personalized_pagerank(edges, seeds, **kw).collect()
-    }
-    monkeypatch.setattr(GR, "_GRAPH_DRIVER_MAX_EDGES", -1)
-    loop = {
-        (r["node"], r["rank"])
-        for r in GR.personalized_pagerank(edges, seeds, **kw).collect()
-    }
-    assert driver == loop
-
-
-def test_lpa_driver_contraction_equals_distributed_loop(spark, monkeypatch):
-    """r14: small graphs run LPA driver-side; the partition must be
-    IDENTICAL to the distributed loop (two triangles with a bridge, a
-    chain, duplicate/self edges)."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (3, 4),
-         (10, 11), (11, 12), (7, 7), (1, 2),],
-        "a INT, b INT",
-    )
-    driver = {
-        (r["node"], r["community"])
-        for r in GR.label_propagation(edges, n_iter=4).collect()
-    }
-    monkeypatch.setattr(GR, "_GRAPH_DRIVER_MAX_EDGES", -1)
-    loop = {
-        (r["node"], r["community"])
-        for r in GR.label_propagation(edges, n_iter=4).collect()
-    }
-    assert driver == loop
-
-
-def test_pagerank_driver_contraction_equals_distributed_loop(spark, monkeypatch):
-    """r14: plain pagerank shares the PPR driver contraction; ranks
-    must be IDENTICAL to the distributed unrolled loop (weighted
-    edges, dangling node, self-loop)."""
-    edges = spark.createDataFrame(
-        [(1, 2, 3.0), (2, 3, 1.0), (3, 1, 2.0), (3, 4, 1.0),
-         (4, 4, 1.0), (5, 1, 2.5)],
-        "src INT, dst INT, w DOUBLE",
-    )
-    driver = {
-        (r["node"], r["rank"])
-        for r in GR.pagerank(edges, weight_col="w", n_iter=4).collect()
-    }
-    monkeypatch.setattr(GR, "_GRAPH_DRIVER_MAX_EDGES", -1)
-    loop = {
-        (r["node"], r["rank"])
-        for r in GR.pagerank(edges, weight_col="w", n_iter=4).collect()
-    }
-    assert driver == loop

@@ -689,53 +689,3 @@ def test_extend_components_equals_rebuild(spark):
     assert got[40] == 40 and got[41] == 40
     # the untouched component kept its label without re-clustering
     assert got[100] == 100 and got[101] == 100
-
-
-def test_cc_driver_contraction_equals_distributed_loop(spark, monkeypatch):
-    """r14: small edge lists contract to a driver-side union-find; the
-    labeling must be IDENTICAL to the distributed loops (both
-    algorithms), on the same mixed topology the star test uses, plus a
-    string-keyed graph that must NOT take the driver path (collation
-    guard) — pinned by forcing the threshold to 0 for the control arm."""
-    import random
-
-    edges = []
-    edges += [(i + 1, i) for i in range(30, 50)]
-    edges += [(a, b) for a in range(5) for b in range(a)]
-    edges += [(60, 61), (61, 62), (62, 60), (62, 63)]
-    edges += [(70, 70), (71, 72)]
-    rnd = random.Random(11)
-    nodes = list(range(100, 140))
-    edges += [(rnd.choice(nodes), rnd.choice(nodes)) for _ in range(50)]
-    df = spark.createDataFrame(edges, "a BIGINT, b BIGINT")
-
-    driver_min = {
-        (r["id"], r["cluster_id"])
-        for r in clustering.connected_components(df, max_iter=60).collect()
-    }
-    driver_star = {
-        (r["id"], r["cluster_id"])
-        for r in clustering.connected_components_star(df).collect()
-    }
-    monkeypatch.setattr(clustering, "_CC_DRIVER_MAX_EDGES", 0)
-    loop_min = {
-        (r["id"], r["cluster_id"])
-        for r in clustering.connected_components(df, max_iter=60).collect()
-    }
-    loop_star = {
-        (r["id"], r["cluster_id"])
-        for r in clustering.connected_components_star(df).collect()
-    }
-    assert driver_min == loop_min == driver_star == loop_star
-    monkeypatch.undo()
-
-    # string ids: must fall through to the loop (same answer either way
-    # for ASCII, but the branch itself must not take the driver path)
-    sdf = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "a STRING, b STRING"
-    )
-    got = {
-        (r["id"], r["cluster_id"])
-        for r in clustering.connected_components(sdf, max_iter=10).collect()
-    }
-    assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}

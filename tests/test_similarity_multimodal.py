@@ -981,55 +981,3 @@ def test_cross_modal_topk_retrieves_own_pair_when_aligned(spark, sf_dir):
     hits = [qid for qid, a in amps.items() if a < 0.3]
     for qid in hits:  # near-identical pair -> must be its own top-1
         assert top1[qid] == qid, (qid, top1)
-
-
-
-def test_kmeans_driver_contraction_equals_distributed_loop(spark, monkeypatch):
-    """r14: small corpora run the Lloyd loop driver-side; assignments,
-    dist2 AND centroids must match the distributed unrolled loop
-    exactly (incl. an emptying cluster and the early_stop path)."""
-    import random
-
-    rnd = random.Random(7)
-    rows = [
-        (i, [round(rnd.uniform(-1, 1), 3) for _ in range(8)])
-        for i in range(60)
-    ]
-    # two far outlier seeds so one seed cluster empties after round 1
-    rows += [(100, [50.0] * 8), (101, [50.1] * 8)]
-    df = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    for es in (False, True):
-        a_d, c_d = S.kmeans_fit(df, k=5, n_iter=3, early_stop=es)
-        driver = (
-            {tuple(r) for r in a_d.collect()},
-            {tuple(r) for r in c_d.collect()},
-        )
-        monkeypatch.setattr(S, "_KMEANS_DRIVER_MAX_ROWS", -1)
-        a_l, c_l = S.kmeans_fit(df, k=5, n_iter=3, early_stop=es)
-        loop = (
-            {tuple(r) for r in a_l.collect()},
-            {tuple(r) for r in c_l.collect()},
-        )
-        monkeypatch.undo()
-        assert driver == loop, f"early_stop={es}"
-
-
-def test_pq_fit_driver_contraction_equals_distributed_loop(spark, monkeypatch):
-    """r14: pq_fit's per-subspace driver kernel must reproduce the
-    fused distributed fit's codebooks exactly."""
-    import random
-
-    rnd = random.Random(13)
-    rows = [
-        (i, [round(rnd.uniform(-1, 1), 3) for _ in range(16)])
-        for i in range(50)
-    ]
-    df = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    driver = {
-        tuple(r) for r in S.pq_fit(df, m_sub=4, k_codes=6, n_iter=2).collect()
-    }
-    monkeypatch.setattr(S, "_KMEANS_DRIVER_MAX_ROWS", -1)
-    loop = {
-        tuple(r) for r in S.pq_fit(df, m_sub=4, k_codes=6, n_iter=2).collect()
-    }
-    assert driver == loop
