@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as SparkWindow
 from pyspark.sql import functions as F
 
+from .util import collect_if_small, driver_frame, np_round_half_up_like_spark
+
 
 def consensus_labels(
     df: DataFrame,
@@ -480,12 +482,10 @@ def bradley_terry_strengths(
     strength 0 after one round (the MM fixed point for never-winners —
     documented; add-one smoothing upstream if undesired).
 
-    Scale: the comparison table aggregates once to (i, j, n_ij) —
-    item²-bounded, NOT comparison-volume — and each iteration is one
-    join of that table against the current strengths plus two keyed
-    aggregates. Items are typically few (model variants, prompt
-    templates); the heavy side (raw comparisons) is touched once.
-    Returns ``(item, strength)``.
+    NULL items, NULL counts and self-pairs drop. Plain BT is the
+    Rao-Kupper fit at θ = 1 with no ties: the comparisons aggregate once
+    to the item²-bounded directed ``(wi, li, w, t = 0)`` table, fit by
+    :func:`_mm_fit`. Returns ``(item, strength)``.
     """
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
@@ -495,77 +495,13 @@ def bradley_terry_strengths(
         if count_col is not None
         else F.lit(1).cast("bigint")
     )
-    raw = pairs.where(w.isNotNull() & l.isNotNull() & (w != l)).select(
-        w.alias("wi"), l.alias("li"), cnt.alias("c")
-    )
-    # r13 opt (guide §1.2, the CLAUDE.md branch-fan-out rule): the raw
-    # comparison volume previously fed THREE lazy branches (wins once,
-    # comp twice through the direction union), so the heavy upstream
-    # derivation ran three times inside the final job. Aggregate it
-    # ONCE to the item²-bounded directed count table, eagerly
-    # checkpoint that, and derive wins/comp from it — sums of sums,
-    # integer-exact, identical results.
     dirc = (
-        raw.groupBy(F.col("wi").alias("i"), F.col("li").alias("j"))
-        .agg(F.sum("c").alias("c"))
-        .localCheckpoint(eager=True)
+        pairs.where(w.isNotNull() & l.isNotNull() & (w != l) & cnt.isNotNull())
+        .groupBy(w.alias("wi"), l.alias("li"))
+        .agg(F.sum(cnt).alias("w"))
+        .withColumn("t", F.lit(0).cast("bigint"))
     )
-    wins = dirc.groupBy(F.col("i").alias("item")).agg(
-        F.sum("c").alias("w_total")
-    )
-    comp = (
-        dirc.select("i", "j", "c")
-        .unionByName(
-            dirc.select(
-                F.col("j").alias("i"), F.col("i").alias("j"), "c"
-            )
-        )
-        .groupBy("i", "j")
-        .agg(F.sum("c").alias("nij"))
-        .persist()
-    )
-    items = comp.select(F.col("i").alias("item")).distinct().persist()
-    try:
-        s = items.select("item", F.lit(1.0).alias("s"))
-        for _ in range(n_iter):
-            sj = s.select(F.col("item").alias("j"), F.col("s").alias("sj"))
-            si = s.select(F.col("item").alias("i"), F.col("s").alias("si"))
-            denom = (
-                comp.join(si, "i")
-                .join(sj, "j")
-                .groupBy(F.col("i").alias("item"))
-                .agg(
-                    F.sum(
-                        F.col("nij").cast("double")
-                        / (F.col("si") + F.col("sj"))
-                    ).alias("d")
-                )
-            )
-            upd = (
-                denom.join(wins, "item", "left")
-                .select(
-                    "item",
-                    (
-                        F.coalesce(F.col("w_total"), F.lit(0)).cast("double")
-                        / F.col("d")
-                    ).alias("s_raw"),
-                )
-            )
-            mean = upd.agg(F.avg("s_raw").alias("m")).alias("mg")
-            s = (
-                upd.crossJoin(F.broadcast(mean))
-                .select(
-                    "item",
-                    F.round(F.col("s_raw") / F.col("mg.m"), 6).alias("s"),
-                )
-                .localCheckpoint(eager=False)
-            )
-        return s.select("item", F.col("s").alias("strength")).localCheckpoint(
-            eager=True
-        )
-    finally:
-        comp.unpersist()
-        items.unpersist()
+    return _mm_fit(dirc, 1.0, n_iter)
 
 
 def bt_win_probabilities(
@@ -743,7 +679,7 @@ def bradley_terry_rao_kupper(
     as in the tie-free fit).
 
     Scale: the comparison volume aggregates once to the item²-bounded
-    ``(i, j, a_ij, b_ij)`` table; each round joins only that.
+    directed ``(wi, li, w, t)`` table that :func:`_mm_fit` fits.
     Returns ``(item, strength)``.
     """
     if n_iter < 1:
@@ -755,32 +691,52 @@ def bradley_terry_rao_kupper(
         )
     w, l = F.col(winner_col), F.col(loser_col)
     t = F.col(tie_col).cast("boolean")
-    raw = pairs.where(
-        w.isNotNull() & l.isNotNull() & (w != l) & t.isNotNull()
-    ).select(w.alias("wi"), l.alias("li"), t.alias("tie"))
-    # r13 opt (guide §1.2, the CLAUDE.md branch-fan-out rule): the raw
-    # comparison volume previously fed THREE lazy branches (the
-    # win+tie explode once, the coefficient union twice), re-running
-    # the upstream derivation three times inside the final job.
-    # Aggregate it ONCE to the item²-bounded directed (wins, ties)
-    # table, eagerly checkpoint, and derive both tables from it —
-    # integer sums of sums, identical results.
     dirc = (
-        raw.groupBy(F.col("wi").alias("wi"), F.col("li").alias("li"))
+        pairs.where(w.isNotNull() & l.isNotNull() & (w != l) & t.isNotNull())
+        .groupBy(w.alias("wi"), l.alias("li"))
         .agg(
-            F.sum(F.when(~F.col("tie"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("w"),
-            F.sum(F.when(F.col("tie"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("t"),
+            F.sum(F.when(~t, 1).otherwise(0)).cast("bigint").alias("w"),
+            F.sum(F.when(t, 1).otherwise(0)).cast("bigint").alias("t"),
         )
-        .localCheckpoint(eager=True)
     )
-    # per-item win + tie totals: wins as wi (non-tie) + ties from
-    # either side; zero-total rows are dropped to keep the exact row
-    # set of the explode formulation (items with no win and no tie
-    # had no row there)
+    return _mm_fit(dirc, theta, n_iter)
+
+
+def _mm_fit(dirc: DataFrame, theta: float, n_iter: int) -> DataFrame:
+    """``n_iter`` Rao-Kupper MM rounds (θ = 1 with ``t`` = 0 is plain
+    Bradley-Terry) over the directed ``(wi, li, w, t)`` table: from
+    ``s = 1``, each round sets
+
+        s_i ← round6(s_raw_i / mean(s_raw)),  s_raw_i = W_i / d_i,
+        d_i = Σ_j [a_ij/(s_i + θ·s_j) + θ·b_ij/(s_j + θ·s_i)]
+
+    with the ordered-pair coefficients ``a_ij = w(i,j) + t(i,j) +
+    t(j,i)``, ``b_ij = w(j,i) + t(i,j) + t(j,i)`` (ties count in both
+    directions), ``W_i`` = wins plus ties of i (0 when not positive) and
+    round6 = Spark's 6dp HALF_UP. A table of at most
+    ``util.DRIVER_CONTRACT_MAX_ROWS`` rows with integral or string items
+    is fit on the driver, summing each d_i in directed-row order (the
+    distributed sums are partition-ordered; both live under the 6dp
+    contract). A larger table, another item type, or a round that
+    divides by zero runs the distributed loop, so Spark decides those
+    cases. Returns ``(item, strength)`` typed from ``wi``."""
+    th = float(theta)
+    rows = (
+        collect_if_small(dirc)
+        if dict(dirc.dtypes)["wi"] in ("tinyint", "smallint", "int", "bigint", "string")
+        else None
+    )
+    fit = _mm_fit_driver(rows, th, n_iter) if rows is not None else None
+    if fit is not None:
+        schema = dirc.select(
+            F.col("wi").alias("item"), F.lit(None).cast("double").alias("strength")
+        ).schema
+        return driver_frame(dirc.sparkSession, fit, schema)
+    # the loop references the directed table from every round: pin it
+    # once (it is item²-bounded), so the comparison volume is read once
+    dirc = dirc.localCheckpoint(eager=True)
+    # per-item win + tie totals; items with no win and no tie get no
+    # row (the left join below gives them W = 0)
     wt = (
         dirc.select(F.col("wi").alias("item"), (F.col("w") + F.col("t")).alias("n"))
         .unionByName(dirc.select(F.col("li").alias("item"), F.col("t").alias("n")))
@@ -788,9 +744,6 @@ def bradley_terry_rao_kupper(
         .agg(F.sum("n").cast("bigint").alias("w_plus_t"))
         .filter(F.col("w_plus_t") > 0)
     )
-    # ordered-pair coefficient table: a_ij = w_ij + t_ij, b_ij = w_ji
-    # + t_ij (ties symmetrize into BOTH ordered directions):
-    # a_ij = w(i,j) + t(i,j) + t(j,i), b_ij = w(j,i) + t(i,j) + t(j,i)
     comp = (
         dirc.select(
             F.col("wi").alias("i"),
@@ -814,7 +767,6 @@ def bradley_terry_rao_kupper(
         .persist()
     )
     items = comp.select(F.col("i").alias("item")).distinct().persist()
-    th = float(theta)
     try:
         s = items.select("item", F.lit(1.0).alias("s"))
         for _ in range(n_iter):
@@ -856,6 +808,43 @@ def bradley_terry_rao_kupper(
     finally:
         comp.unpersist()
         items.unpersist()
+
+
+def _mm_fit_driver(rows, th: float, n_iter: int) -> list[tuple] | None:
+    """The driver rounds of :func:`_mm_fit` over collected directed
+    rows; None when a round would divide by zero."""
+    from collections import defaultdict
+
+    a, b, wt = defaultdict(int), defaultdict(int), defaultdict(int)
+    for wi, li, w, t in rows:
+        a[wi, li] += w + t
+        b[wi, li] += t
+        a[li, wi] += t
+        b[li, wi] += w + t
+        wt[wi] += w + t
+        wt[li] += t
+    if not wt:
+        return []
+    items = list(wt)
+    wins = [float(wt[x]) if wt[x] > 0 else 0.0 for x in items]
+    s = dict.fromkeys(items, 1.0)
+    try:
+        for _round in range(n_iter):
+            d = dict.fromkeys(items, 0.0)
+            for (i, j), aij in a.items():
+                d[i] += float(aij) / (s[i] + th * s[j]) + th * float(
+                    b[i, j]
+                ) / (s[j] + th * s[i])
+            raw = [wn / d[x] for wn, x in zip(wins, items)]
+            m = 0.0
+            for r in raw:  # a plain left fold, as Spark's avg adds
+                m += r
+            m /= len(raw)
+            s_new = np_round_half_up_like_spark([r / m for r in raw])
+            s = {x: float(v) for x, v in zip(items, s_new)}
+    except ZeroDivisionError:
+        return None
+    return list(s.items())
 
 
 def pairwise_cohen_kappa(

@@ -27,7 +27,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import hashed_tf
-from .util import collect_if_small, driver_frame, ensure_parallelism
+from .util import (
+    collect_if_small,
+    driver_frame,
+    ensure_parallelism,
+    np_round_half_up_like_spark,
+)
 
 # r14 (guide §8; the kmeans/pq Lloyd-fit precedent): fits whose hashed
 # long-form feature table fits under the driver bound
@@ -75,12 +80,10 @@ def _logreg_fit_driver(
     (over the bound / NULL labels → caller runs the distributed loop).
     Per-iteration arithmetic mirrors the DataFrame form: unrounded
     margins/residuals, 6dp-rounded mean gradient and weights
-    (``_np_round_half_up_like_spark``); accumulation order is collected
+    (``util.np_round_half_up_like_spark``); accumulation order is collected
     row order — the same partial-sum tolerance the distributed form's
     partition order already lives under."""
     import numpy as np
-
-    from .similarity import _np_round_half_up_like_spark
 
     # the narrow (id, label) rows first: every doc has a bias feature
     # row, so more docs than the bound means more feature rows too — an
@@ -108,9 +111,6 @@ def _logreg_fit_driver(
     tf = np.array([float(r["tf"]) for r in frows], dtype=np.float64)
     nb = len(buckets)
 
-    def round6(a):
-        return _np_round_half_up_like_spark(a, 1e6)
-
     w = None
     for _ in range(max(1, n_iter)):
         if w is None:
@@ -121,8 +121,8 @@ def _logreg_fit_driver(
             r_ = 1.0 / (1.0 + np.exp(-m)) - y
         g = np.zeros(nb, dtype=np.float64)
         np.add.at(g, bi, r_[di] * tf)
-        g = round6(g / n)
-        w = round6(-lr * g) if w is None else round6(w - lr * g)
+        g = np_round_half_up_like_spark(g / n)
+        w = np_round_half_up_like_spark(-lr * g if w is None else w - lr * g)
     spark = docs.sparkSession
     return driver_frame(
         spark,

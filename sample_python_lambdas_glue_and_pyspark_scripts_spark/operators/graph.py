@@ -28,15 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import collect_if_small, driver_frame, ensure_parallelism
-
-
-def _round6(x):
-    """Scalar/array Spark-parity HALF_UP 6dp round (the pinned numpy
-    twin from operators.similarity)."""
-    from .similarity import _np_round_half_up_like_spark
-
-    return _np_round_half_up_like_spark(x, 1e6)
+from .util import (
+    collect_if_small,
+    driver_frame,
+    ensure_parallelism,
+    np_round_half_up_like_spark,
+)
 
 
 def pagerank(
@@ -106,8 +103,8 @@ def pagerank(
         if n == 0:
             raise ValueError("pagerank: empty edge table")
         if trans_rows is not None:
-            r1n = float(_round6(1.0 / n))
-            b0 = float(_round6((1.0 - damping) / n))
+            r1n = float(np_round_half_up_like_spark(1.0 / n))
+            b0 = float(np_round_half_up_like_spark((1.0 - damping) / n))
             base_rows = [
                 {"node": r["node"], "__p0": r1n, "__b": b0}
                 for r in node_rows
@@ -184,7 +181,7 @@ def _ppr_driver_iterate(
     for _ in range(n_iter):
         inflow = np.zeros(len(nodes), dtype=np.float64)
         np.add.at(inflow, vi, ranks[ui] * p)
-        ranks = _round6(b + damping * inflow)
+        ranks = np_round_half_up_like_spark(b + damping * inflow)
     return driver_frame(
         spark,
         [(nodes[i], float(ranks[i])) for i in range(len(nodes))],
@@ -298,10 +295,37 @@ def personalized_pagerank(
             )
             .persist()
         )
+        trans_rows = collect_if_small(trans)
+        if trans_rows is not None:
+            # r14 driver contraction: Spark computed the w/Σw transition
+            # probs and the 6dp seed distribution p0; the driver rounds
+            # the teleport base round6((1-d)·p0) with the pinned HALF_UP
+            # twin and runs the Σ rank·p rounds (partial-sum order is
+            # already partition-dependent in the loop: 6dp tolerance).
+            # Nodes are the transition endpoints plus the seeds: only
+            # the target of a NULL-source edge, ranked 0 by the loop,
+            # has no row here.
+            p0_rows = dict(p0.collect())
+            node_ids = dict.fromkeys(
+                [x for r in trans_rows for x in (r["__u"], r["__v"])] + list(p0_rows)
+            )
+            p0v = [p0_rows.get(x, 0.0) for x in node_ids]
+            bv = np_round_half_up_like_spark([(1.0 - damping) * x for x in p0v])
+            return _ppr_driver_iterate(
+                seeds.sparkSession,
+                trans_rows,
+                [
+                    {"node": x, "__p0": p, "__b": float(b)}
+                    for x, p, b in zip(node_ids, p0v, bv)
+                ],
+                n_iter,
+                damping,
+                dict(nodes.dtypes)["node"],
+            )
         # per-node teleport base (1-d)*p_seed, 0 off-seed; carried with
         # the node table so every iteration is one extra column, not an
         # extra join
-        basev_expr = (
+        basev = (
             nodes.join(p0, "node", "left")
             .select(
                 "node",
@@ -312,27 +336,8 @@ def personalized_pagerank(
                     6,
                 ).alias("__b"),
             )
+            .persist()
         )
-        trans_rows = collect_if_small(trans)
-        if trans_rows is not None:
-            # r14 driver contraction: SPARK computed every
-            # pre-iteration quantity above (w/Σw transition probs, the
-            # 6dp-rounded seed distribution and teleport base), so the
-            # only arithmetic that moves engines is the iteration's
-            # Σ rank·p multiply-add — the same ≤6dp-tolerance exposure
-            # the distributed form already has across its own
-            # nondeterministic partial-sum orders (and the PCA Gram
-            # precedent, oracle-verified). Zero Spark jobs per
-            # iteration instead of an unrolled join+aggregate chain.
-            return _ppr_driver_iterate(
-                seeds.sparkSession,
-                trans_rows,
-                basev_expr.collect(),
-                n_iter,
-                damping,
-                dict(nodes.dtypes)["node"],
-            )
-        basev = basev_expr.persist()
         # basev is referenced by EVERY iteration of the unrolled loop —
         # an unmaterialized cache gets recomputed per reference inside
         # the one big final job. Its count also fills the nodes cache;

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import driver_frame, np_round_half_up_like_spark
+
 
 def rank_list(
     df: DataFrame,
@@ -174,112 +176,115 @@ def mmr_rerank(
     rel_col)`` from a retriever (``cosine_topk`` / ``ivf_topk`` /
     ``rrf_fuse``) with ``rel_col`` already 6dp-rounded; ``vectors``
     supplies the candidate embeddings for the redundancy term. The
-    greedy loop is INHERENTLY sequential in ``k`` (each pick changes the
-    next redundancy term), so it runs as ``k`` candidate-sized rounds:
-    remaining × selected pair sims (selected ≤ round index per query),
-    a (query, cand)-keyed MAX, one per-query argmax window. Nothing
-    corpus-sized is ever touched — cost is O(k·m·|queries|) pair rows,
-    co-partitioned on query_id; lineage is truncated per round exactly
-    like ``kmeans_fit``.
+    greedy picks are INHERENTLY sequential in ``k`` (each pick changes
+    the next redundancy term) but independent across queries, so the
+    rerank is one grouped map: ``candidates ⋈ vectors`` grouped by
+    ``query_id``, each group's ≤ m rows running the k picks in pandas
+    (:func:`_mmr_picks`). Nothing corpus-sized is touched, and the work
+    spreads over queries with no size bound.
 
-    Determinism contract: pair sims and the MMR score round to
-    ``round_to`` before every comparison; argmax tiebreak is id ASC;
-    the empty selected set contributes redundancy 0.0 (so rank 1 is the
-    pure-relevance argmax scaled by λ). A fixed ``k`` therefore unrolls
-    into plain SQL — the oracle mirrors the loop CTE-for-CTE.
+    Determinism contract (the arithmetic of ``similarity.cosine``
+    and ``F.round``): dot products and sums of squares fold left in
+    element order; a zero, NaN or overflowed norm product or a NaN dot
+    gives a NULL sim, and the redundancy is the max non-NULL sim to the
+    selected set, 0.0 when there is none (so rank 1 is the
+    pure-relevance argmax scaled by λ). Sims and the score ``λ·rel −
+    (1−λ)·ms`` round to ``round_to`` (Spark HALF_UP) before every
+    comparison; the argmax breaks ties by id ASC, and a NULL score —
+    NULL or NaN relevance — ranks last. A fixed ``k`` therefore
+    unrolls into plain SQL — the oracle mirrors the picks
+    CTE-for-CTE.
 
-    Returns ``(query_id, id_col, sel_rank, mmr_score)`` with
-    ``sel_rank`` 1..k (queries with fewer than k candidates return
-    fewer rows).
+    Returns ``(query_id, id_col, sel_rank, mmr_score)``, the id types
+    those of ``candidates``, with ``sel_rank`` 1..k (queries with
+    fewer than k candidates return fewer rows).
     """
-    from functools import reduce
-
-    from .similarity import _dbl, cosine_from_norms, l2_norm
+    from .similarity import _dbl
 
     if k <= 0:
         raise ValueError(f"mmr_rerank: k must be positive, got {k}")
     if not (0.0 <= lam <= 1.0):
         raise ValueError(f"mmr_rerank: lambda must be in [0, 1], got {lam}")
-    mu = 1.0 - lam
     v = vectors.select(
         F.col(vec_id_col).alias("__vid"), _dbl(vec_col).alias("__cv")
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-    rem = (
+    )
+    rows = (
         candidates.select(
             "query_id",
             F.col(id_col).alias("__id"),
-            F.col(rel_col).alias("__rel"),
+            F.col(rel_col).cast("double").alias("__rel"),
         )
         .join(v, F.col("__id") == F.col("__vid"))
         .drop("__vid")
     )
-    sel: DataFrame | None = None
-    picks: list[DataFrame] = []
-    for i in range(1, k + 1):
-        if sel is None:
-            scored = rem.withColumn("__ms", F.lit(0.0))
-        else:
-            pair = rem.alias("r").join(
-                sel.select(
-                    "query_id",
-                    F.col("__cv").alias("__sv"),
-                    F.col("__cn").alias("__sn"),
-                ),
-                "query_id",
-            )
-            sims = pair.withColumn(
-                "__sim",
-                F.round(
-                    cosine_from_norms(
-                        F.col("r.__cv"),
-                        F.col("__sv"),
-                        F.col("r.__cn"),
-                        F.col("__sn"),
-                    ),
-                    round_to,
-                ),
-            )
-            ms = sims.groupBy("query_id", "__id").agg(
-                F.max("__sim").alias("__ms")
-            )
-            scored = rem.join(ms, ["query_id", "__id"], "left")
-        scored = scored.withColumn(
-            "__mmr",
-            F.round(
-                F.lit(lam) * F.col("__rel")
-                - F.lit(mu) * F.coalesce(F.col("__ms"), F.lit(0.0)),
-                round_to,
-            ),
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("__mmr").desc(), F.col("__id").asc()
-        )
-        pick = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("query_id", "__id", "__cv", "__cn", "__mmr")
-            .localCheckpoint(eager=False)
-        )
-        picks.append(
-            pick.select(
-                "query_id",
-                F.col("__id"),
-                F.lit(i).cast("int").alias("sel_rank"),
-                F.col("__mmr").alias("mmr_score"),
-            )
-        )
-        sel_cols = pick.select("query_id", "__id", "__cv", "__cn")
-        sel = sel_cols if sel is None else sel.unionByName(sel_cols)
-        rem = rem.join(
-            pick.select("query_id", "__id"), ["query_id", "__id"], "left_anti"
-        ).localCheckpoint(eager=False)
-    out = reduce(lambda a, b: a.unionByName(b), picks)
-    return out.select(
+    schema = candidates.select(
         "query_id",
-        F.col("__id").alias(id_col),
-        "sel_rank",
-        "mmr_score",
+        id_col,
+        F.lit(None).cast("int").alias("sel_rank"),
+        F.lit(None).cast("double").alias("mmr_score"),
+    ).schema
+    scale, cols = float(10**round_to), schema.fieldNames()
+    return rows.groupBy("query_id").applyInPandas(
+        lambda key, pdf: _mmr_picks(key, pdf, k, lam, scale, cols), schema
     )
+
+
+def _mmr_picks(key, pdf, k: int, lam: float, scale: float, cols: list):
+    """The greedy picks over one query's ``(__id, __rel, __cv)`` rows as
+    a ``cols`` = ``(query_id, id, sel_rank, mmr_score)`` frame
+    (arithmetic: :func:`mmr_rerank`). Picking an id removes every row
+    that carries it."""
+    import math
+
+    import pandas as pd
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    def cosine(r, p):
+        denom = norms[r] * norms[p]
+        if not (0 < denom < math.inf) or len(vecs[r]) != len(vecs[p]):
+            return None
+        sim = fold(vecs[r], vecs[p]) / denom
+        return None if math.isnan(sim) else sim
+
+    def round_or_none(xs):
+        # None stays None; the helper keeps NaN and ±inf as they are
+        got = iter(np_round_half_up_like_spark([x for x in xs if x is not None], scale))
+        return [None if x is None else float(next(got)) for x in xs]
+
+    ids = pdf["__id"].tolist()
+    rel = [None if math.isnan(r) else r for r in pdf["__rel"].astype(float)]
+    # a NULL vector or element makes every sim NULL, as NaN does
+    vecs = [
+        [math.nan] if v is None else [math.nan if x is None else float(x) for x in v]
+        for v in pdf["__cv"]
+    ]
+    norms = [math.sqrt(fold(v, v)) for v in vecs]
+    ms: list = [None] * len(ids)
+    left, out = list(range(len(ids))), []
+    for rank in range(1, k + 1):
+        if not left:
+            break
+        raw = [
+            None if rel[r] is None else lam * rel[r] - (1.0 - lam) * (ms[r] or 0.0)
+            for r in left
+        ]
+        scores = [None if x is None or math.isnan(x) else x for x in round_or_none(raw)]
+        n = min(
+            range(len(left)),
+            key=lambda n: (scores[n] is None, -(scores[n] or 0.0), ids[left[n]]),
+        )
+        p = left[n]
+        out.append((key[0], ids[p], rank, scores[n]))
+        left = [r for r in left if ids[r] != ids[p]]
+        for r, sim in zip(left, round_or_none([cosine(r, p) for r in left])):
+            if sim is not None and (ms[r] is None or sim > ms[r]):
+                ms[r] = sim
+    return pd.DataFrame(out, columns=cols)
 
 
 def hard_negatives(
@@ -369,7 +374,8 @@ def rbo_report(
                          "< p_den")
     p = float(p_num) / float(p_den)
     spark = run_a.sparkSession
-    weights = spark.createDataFrame(
+    weights = driver_frame(
+        spark,
         [(d, (1.0 - p) * p ** (d - 1)) for d in range(1, depth + 1)],
         "d int, w double",
     )

@@ -26,6 +26,7 @@ from .util import (
     driver_frame,
     ensure_parallelism,
     guard_quadratic,
+    np_round_half_up_like_spark,
 )
 
 # r14 (guide §8; the CC/PPR/Gram precedent applied to the Lloyd fits):
@@ -138,35 +139,6 @@ def cosine_topk(
     )
 
 
-def _np_round_half_up_like_spark(x, scale: float):
-    """numpy twin of Spark ``ROUND(double, n)`` (n = log10(scale)).
-
-    Spark rounds via BigDecimal.valueOf(x).setScale(n, HALF_UP): it
-    rounds the SHORTEST DECIMAL REPR of the double, not the binary
-    value. The fast floor(|x|*scale + .5) path matches it everywhere
-    except the 2.675-style boundary band (shortest repr ends in ...5
-    while the binary value sits just below); only that band routes
-    through Python's repr -> Decimal, which reproduces
-    BigDecimal.valueOf exactly. Parity is pinned by
-    tests/test_similarity_multimodal.py::test_np_round_matches_spark.
-    """
-    import numpy as np
-
-    scaled = np.abs(x) * scale
-    out = np.sign(x) * np.floor(scaled + 0.5) / scale
-    frac = scaled - np.floor(scaled)
-    band = np.abs(frac - 0.5) < 1e-6
-    if band.any():
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal(1) / Decimal(int(scale))
-        out[band] = [
-            float(Decimal(repr(float(v))).quantize(q, rounding=ROUND_HALF_UP))
-            for v in np.asarray(x[band]).ravel()
-        ]
-    return out
-
-
 def cosine_topk_vectorized(
     corpus: DataFrame,
     queries: DataFrame,
@@ -191,7 +163,7 @@ def cosine_topk_vectorized(
     pair relation never materializes as Spark rows and never shuffles.
 
     Parity details pinned by tests: Spark shortest-decimal-repr HALF_UP
-    rounding (see ``_np_round_half_up_like_spark``); zero-norm and
+    rounding (see ``np_round_half_up_like_spark``); zero-norm and
     NaN-poisoned vectors score NULL (never NaN) on both sides; a batch
     short of k non-null candidates pads with its lowest-id NULL-sim rows
     so the global NULLS-LAST fill matches the join formulation's.
@@ -227,9 +199,6 @@ def cosine_topk_vectorized(
     scale = float(10**round_to)
     corpus_proj = ensure_parallelism(corpus).select(id_col, vec_col)
 
-    def _round_half_up(x):
-        return _np_round_half_up_like_spark(x, scale)
-
     def _score_block(q_rows):
         qids = np.array([r[0] for r in q_rows], dtype=np.int64)
         Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
@@ -254,7 +223,9 @@ def cosine_topk_vectorized(
                 valid = np.isfinite(cn) & (cn != 0.0)
                 iv = ids[valid]
                 inv = np.sort(ids[~valid])
-                S = _round_half_up((C[valid] / cn[valid, None]) @ Qt)
+                S = np_round_half_up_like_spark(
+                    (C[valid] / cn[valid, None]) @ Qt, scale
+                )
                 # self-matches become -inf in ONE vectorized scatter — a
                 # per-query boolean mask would copy the column 1024 times
                 S[iv[:, None] == qids[None, :]] = -np.inf
@@ -811,12 +782,9 @@ def _lloyd_driver(ids, vecs, k: int, n_iter: int, early_stop: bool):
     n, d = X.shape
     k = min(k, n)
 
-    def round6(a):
-        return _np_round_half_up_like_spark(a, 1e6)
-
     # seeds: first k rows by id; label_centroids over one row = round6(x)
     labels_now = list(range(k))
-    C = round6(X[:k].copy())
+    C = np_round_half_up_like_spark(X[:k].copy(), 1e6)
 
     def e_step():
         kc = C.shape[0]
@@ -824,7 +792,7 @@ def _lloyd_driver(ids, vecs, k: int, n_iter: int, early_stop: bool):
         for j in range(d):  # sequential fold over dims — Spark's order
             diff = X[:, j][:, None] - C[:, j][None, :]
             acc = acc + diff * diff
-        dist = round6(acc)
+        dist = np_round_half_up_like_spark(acc, 1e6)
         pick = np.argmin(dist, axis=1)  # first min = smallest label
         return np.array(labels_now)[pick], dist[np.arange(n), pick]
 
@@ -836,7 +804,7 @@ def _lloyd_driver(ids, vecs, k: int, n_iter: int, early_stop: bool):
             for i in members:
                 acc = acc + X[i]
             new_labels.append(lbl)
-            rows_c.append(round6(acc / len(members)))
+            rows_c.append(np_round_half_up_like_spark(acc / len(members), 1e6))
         return new_labels, np.array(rows_c, dtype=np.float64)
 
     asg = dist2 = None
@@ -977,7 +945,7 @@ def _semantic_dropped_vectorized(
             sims = mat[s:e] @ mat.T
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = sims / (norms[s:e, None] * norms[None, :])
-            sims = _np_round_half_up_like_spark(sims, 1e6)
+            sims = np_round_half_up_like_spark(sims, 1e6)
             lower = np.arange(n)[None, :] < np.arange(s, e)[:, None]
             # NaN (zero-norm / poisoned) compares False — never drops,
             # matching the join path's NULL similarity
@@ -1036,7 +1004,7 @@ def _semantic_maxsim_vectorized(
             sims = mat[s:e] @ mat.T
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = sims / (norms[s:e, None] * norms[None, :])
-            sims = _np_round_half_up_like_spark(sims, 1e6)
+            sims = np_round_half_up_like_spark(sims, 1e6)
             lower = np.arange(n)[None, :] < np.arange(s, e)[:, None]
             with np.errstate(invalid="ignore"):
                 ok = (sims >= thr) & lower  # NaN compares False
@@ -1107,7 +1075,7 @@ def semantic_dedup(
     ``applyInPandas`` and scores all pairs with row-chunked BLAS matmuls
     (Σ|c|² multiply-adds happen inside BLAS instead of as Σ|c|²
     higher-order-function Spark rows — 5-8× at sf0.1, identical output:
-    the 6dp HALF_UP round uses ``_np_round_half_up_like_spark`` and
+    the 6dp HALF_UP round uses ``np_round_half_up_like_spark`` and
     NaN/zero-norm pairs never drop, matching the join path's NULL
     semantics; requires integral ids like ``cosine_topk_vectorized``).
     ``"join"`` is the pure-DataFrame formulation the oracle SQL mirrors
@@ -1297,13 +1265,13 @@ def _gram_power_iterate(G, d: int, n_iter: int) -> list[float]:
     one ulp between numpy and the unrolled SQL. The pin is the
     correctness-gate re-run of the pca_* queries on every testdata
     regeneration (CLAUDE.md rule), not the arithmetic alone. Rounding
-    is ``_np_round_half_up_like_spark`` (parity test-pinned)."""
+    is ``np_round_half_up_like_spark`` (parity test-pinned)."""
     import numpy as np
 
     v = np.full(
         d,
         float(
-            _np_round_half_up_like_spark(
+            np_round_half_up_like_spark(
                 np.array([1.0 / d**0.5]), 1e6
             )[0]
         ),
@@ -1311,7 +1279,7 @@ def _gram_power_iterate(G, d: int, n_iter: int) -> list[float]:
     for _ in range(n_iter):
         w = G @ v
         nrm = float(np.sqrt(np.sum(w * w)))
-        v = _np_round_half_up_like_spark(w / nrm, 1e6)
+        v = np_round_half_up_like_spark(w / nrm, 1e6)
     return [float(x) for x in v]
 
 

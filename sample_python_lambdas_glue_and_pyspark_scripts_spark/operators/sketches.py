@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import driver_frame
+
 
 def _cms_slot(key: Column, row: int, width: int) -> Column:
     """Row-seeded md5 slot hash — identical in DuckDB via
@@ -673,9 +675,7 @@ def priority_estimates(sketch: DataFrame, k: int = 32) -> DataFrame:
         .crossJoin(
             F.broadcast(
                 tau.unionByName(
-                    tau.sparkSession.createDataFrame(
-                        [(0.0,)], "__tau double"
-                    )
+                    driver_frame(tau.sparkSession, [(0.0,)], "__tau double")
                 ).orderBy(F.col("__tau").desc()).limit(1)
             )
         )
@@ -780,8 +780,8 @@ def sampled_quantile_report(
     is ≤ k rows by construction.
     """
     spark = sample.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in quantiles], "q_num INT, q_den INT"
+    qdf = driver_frame(
+        spark, [(int(a), int(b)) for a, b in quantiles], "q_num INT, q_den INT"
     )
     if any(a < 1 or b < 1 or a > b for a, b in quantiles):
         raise ValueError(
@@ -901,8 +901,8 @@ def grouped_quantile_report(
             "grouped_quantile_report: quantiles must be rationals in (0, 1]"
         )
     spark = sample.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in quantiles], "q_num INT, q_den INT"
+    qdf = driver_frame(
+        spark, [(int(a), int(b)) for a, b in quantiles], "q_num INT, q_den INT"
     )
 
     def _side(df: DataFrame, gcol: str, vcol: str, out_name: str) -> DataFrame:

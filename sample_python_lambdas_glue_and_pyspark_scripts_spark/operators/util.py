@@ -39,6 +39,37 @@ def collect_if_small(df: DataFrame, max_rows: int | None = None) -> list[Row] | 
     return None if len(rows) > max_rows else rows
 
 
+def np_round_half_up_like_spark(x, scale: float = 1e6):
+    """numpy twin of Spark ``ROUND(double, n)`` (n = log10(scale)) for an
+    array or a scalar; the result is an ndarray of ``x``'s shape.
+
+    Spark rounds via BigDecimal.valueOf(x).setScale(n, HALF_UP): it
+    rounds the SHORTEST DECIMAL REPR of the double, not the binary
+    value. The fast floor(|x|*scale + .5) path matches it everywhere
+    except the 2.675-style boundary band (shortest repr ends in ...5
+    while the binary value sits just below); only that band routes
+    through Python's repr -> Decimal, which reproduces
+    BigDecimal.valueOf exactly. NaN and ±inf pass through, as in Spark.
+    Parity is pinned by tests/test_driver_frame.py::test_np_round_matches_spark.
+    """
+    import numpy as np
+
+    x = np.asarray(x, dtype=np.float64)
+    scaled = np.abs(x) * scale
+    out = np.asarray(np.sign(x) * np.floor(scaled + 0.5) / scale)
+    frac = scaled - np.floor(scaled)
+    band = np.abs(frac - 0.5) < 1e-6
+    if band.any():
+        from decimal import ROUND_HALF_UP, Decimal
+
+        q = Decimal(1) / Decimal(int(scale))
+        out[band] = [
+            float(Decimal(repr(float(v))).quantize(q, rounding=ROUND_HALF_UP))
+            for v in x[band].ravel()
+        ]
+    return out
+
+
 def estimated_size_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for the plan (file bytes for scans)."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -82,6 +113,8 @@ def driver_frame(
     - ``literal_rows``: a handful of control rows that are WRITTEN
       (ledger, catalog), where one partition and one file per append
       matter.
+    - ``np_round_half_up_like_spark``: every 6dp round a driver kernel
+      makes, so its numbers equal what ``F.round`` gives in the plan.
     - ``spark.createDataFrame(list)``: avoid for query data — in classic
       PySpark it wraps ``parallelize`` in a PythonRDD, so every execution
       pays a Python-worker round trip.

@@ -1,4 +1,5 @@
-"""Driver contractions (CC, star, PageRank, PPR, LPA, k-means, PQ, logreg):
+"""Driver contractions (CC, star, PageRank, PPR, LPA, k-means, PQ, logreg,
+the Bradley-Terry/Rao-Kupper MM fit):
 inputs under one size bound (``util.DRIVER_CONTRACT_MAX_ROWS``) are
 collected through ``util.collect_if_small`` and solved on the driver,
 larger ones take the operator's distributed loop. Both paths must give
@@ -11,9 +12,11 @@ import uuid
 import pytest
 
 from sample_python_lambdas_glue_and_pyspark_scripts_spark.operators import (
+    annotation as AN,
     classifier as CL,
     clustering,
     graph as GR,
+    retrieval as R,
     similarity as S,
     util,
 )
@@ -176,6 +179,39 @@ def _case_logreg(spark, monkeypatch):
     assert driver == loop
 
 
+def _case_bradley_terry(spark, monkeypatch):
+    """Counted comparisons in both directions, a never-winner (d) and a
+    NULL count that drops; several round counts."""
+    pairs = spark.createDataFrame(
+        [("a", "b", 3), ("b", "a", 1), ("a", "c", 2), ("c", "b", 2),
+         ("b", "d", 1), ("c", "d", 4), ("e", "a", 1), ("c", "e", 2),
+         ("e", "b", None)],
+        "winner STRING, loser STRING, n BIGINT",
+    )
+    for it in (1, 3, 5):
+        driver = _rowset(AN.bradley_terry_strengths(pairs, count_col="n", n_iter=it))
+        _force_loop(monkeypatch)
+        loop = _rowset(AN.bradley_terry_strengths(pairs, count_col="n", n_iter=it))
+        monkeypatch.undo()
+        assert driver == loop, f"n_iter={it}"
+        assert ("d", 0.0) in driver and len(driver) == 5
+
+
+def _case_rao_kupper(spark, monkeypatch):
+    """θ=1.5 with a never-winner (z), a tie-only item (t), ties listed in
+    both orders and a repeated pair; integer item ids."""
+    rows = [(1, 2, False), (1, 2, False), (2, 1, False), (2, 3, False),
+            (3, 9, False), (1, 9, False), (7, 1, True), (2, 7, True),
+            (3, 1, True), (1, 3, True), (4, 2, False), (3, 4, False)]
+    pairs = spark.createDataFrame(rows, "winner INT, loser INT, is_tie BOOLEAN")
+    driver = _rowset(AN.bradley_terry_rao_kupper(pairs, theta=1.5, n_iter=4))
+    _force_loop(monkeypatch)
+    loop = _rowset(AN.bradley_terry_rao_kupper(pairs, theta=1.5, n_iter=4))
+    assert driver == loop
+    got = dict(driver)
+    assert got[9] == 0.0 and got[7] > 0.0
+
+
 _CASES = {
     "cc": _case_cc,
     "ppr": _case_ppr,
@@ -184,6 +220,8 @@ _CASES = {
     "kmeans": _case_kmeans,
     "pq": _case_pq,
     "logreg": _case_logreg,
+    "bradley_terry": _case_bradley_terry,
+    "rao_kupper": _case_rao_kupper,
 }
 
 
@@ -211,7 +249,9 @@ def test_graph_builds_job_count(spark):
     collect() pairs and PPR read its node table off the raw seeds, the
     builds took CC 5, star 8, LPA 5, PageRank 12 and PPR 19 jobs (the
     same under local[2] with 32 shuffle partitions and under this
-    suite's session, repeated across passes)."""
+    suite's session, repeated across passes). PPR then took 16 until its
+    driver path built the teleport base from the collected seed
+    distribution instead of collecting a joined node table."""
     df = _cc_edges(spark)
     seeds = spark.createDataFrame([(0,), (31,)], "node BIGINT")
     builds = {
@@ -219,7 +259,36 @@ def test_graph_builds_job_count(spark):
         "star": (6, lambda: clustering.connected_components_star(df)),
         "lpa": (3, lambda: GR.label_propagation(df)),
         "pagerank": (9, lambda: GR.pagerank(df, src="a", dst="b")),
-        "ppr": (16, lambda: GR.personalized_pagerank(df, seeds, src="a", dst="b")),
+        "ppr": (12, lambda: GR.personalized_pagerank(df, seeds, src="a", dst="b")),
+    }
+    sc = spark.sparkContext
+    got = {name: len(_group_jobs(sc, build)) for name, (_, build) in builds.items()}
+    assert all(got[name] <= pin for name, (pin, _) in builds.items()), got
+
+
+def test_fixed_round_fit_builds_job_count(spark):
+    """Spark jobs issued while the fixed-round fits build on small
+    fixtures: the BT and RK fits collect their directed table once and
+    run the MM rounds on the driver; MMR is one lazy grouped map. When
+    each of them unrolled its rounds into DataFrame joins with per-round
+    checkpoints, the builds took BT 39-40, RK 39 and MMR 36 jobs
+    (local[2], two passes)."""
+    pairs = spark.createDataFrame(
+        [("a", "b", False), ("b", "c", True), ("c", "a", False), ("a", "c", False)],
+        "winner STRING, loser STRING, is_tie BOOLEAN",
+    )
+    cand = spark.createDataFrame(
+        [(q, i, 1.0 - i / 10.0) for q in (0, 1) for i in range(1, 7)],
+        "query_id BIGINT, neighbor_id BIGINT, sim DOUBLE",
+    )
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 2)]) for i in range(1, 7)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    builds = {
+        "bradley_terry": (2, lambda: AN.bradley_terry_strengths(pairs, n_iter=3)),
+        "rao_kupper": (2, lambda: AN.bradley_terry_rao_kupper(pairs, n_iter=3)),
+        "mmr": (0, lambda: R.mmr_rerank(cand, vecs, k=4)),
     }
     sc = spark.sparkContext
     got = {name: len(_group_jobs(sc, build)) for name, (_, build) in builds.items()}

@@ -5,8 +5,11 @@ import math
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from sample_python_lambdas_glue_and_pyspark_scripts_spark.operators.util import (
     driver_frame,
+    np_round_half_up_like_spark,
 )
 
 _SCHEMA = (
@@ -85,3 +88,33 @@ def test_no_python_worker_in_lineage(spark):
     # the path it replaces does carry one
     ref = spark.createDataFrame(_ROWS, _SCHEMA).groupBy("i").count()
     assert "PythonRDD" in _rdd_lineage(ref)
+
+
+def test_np_round_matches_spark(spark):
+    """The numpy half-up twin must reproduce Spark ROUND on boundary
+    doubles where the shortest decimal repr disagrees with the binary
+    value (the 2.675 pattern) — Spark rounds the repr, not the bits.
+    A scalar in the boundary band (1/128 = 0.0078125) rounds too."""
+    import numpy as np
+
+    vals = [
+        0.1234565,   # binary sits just BELOW the .5 boundary
+        -0.1234565,
+        0.9999995,
+        0.12345649999,  # genuinely below: must NOT round up
+        0.1234564999999999,
+        2.675,
+        -2.675,
+        0.5000004999,
+        0.1,
+        0.0,
+        1.0,
+        -1.0,
+        1.0 / 128,
+    ]
+    df = spark.createDataFrame([(v,) for v in vals], "x DOUBLE")
+    want = [r["r"] for r in
+            df.select(F.round("x", 6).alias("r")).collect()]
+    got = np_round_half_up_like_spark(np.array(vals), 1e6).tolist()
+    assert got == want
+    assert float(np_round_half_up_like_spark(1.0 / 128)) == want[-1]

@@ -661,10 +661,11 @@ def _py_mmr(cands, vecs, k, lam):
     import math
 
     def cos(a, b):
+        # a zero-norm vector has no cosine: NULL, which max() skips
         d = sum(x * y for x, y in zip(a, b))
         na = math.sqrt(sum(x * x for x in a))
         nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb)
+        return None if na * nb == 0 else d / (na * nb)
 
     out = []
     for qid, cl in cands.items():
@@ -675,8 +676,9 @@ def _py_mmr(cands, vecs, k, lam):
                 break
             best = None
             for nid, rel in rem.items():
+                sims = [cos(vecs[nid], vecs[s]) for s in sel]
                 ms = max(
-                    (_py_round6(cos(vecs[nid], vecs[s])) for s in sel),
+                    (_py_round6(x) for x in sims if x is not None),
                     default=0.0,
                 )
                 score = _py_round6(lam * rel - (1.0 - lam) * ms)
@@ -714,6 +716,44 @@ def test_mmr_matches_python_mirror(spark, mmr_vecs):
         cands.setdefault(r.query_id, []).append((r.neighbor_id, r.sim))
     expected = _py_mmr({q: dict(c) for q, c in cands.items()}, vecs, 3, 0.5)
     assert got == expected
+
+
+def test_mmr_null_sims_ties_short_lists_and_string_ids(spark):
+    """A zero-norm candidate (its sims are NULL: redundancy 0 when no
+    other sim exists, and max skips them otherwise), an exact
+    rank-1 score tie (id ASC wins), a query with fewer than k
+    candidates, and string ids, whose type the output keeps."""
+    vecs = {
+        "a": [1.0, 0.0, 0.0],
+        "b": [0.0, 1.0, 0.0],
+        "c": [1.0, 1.0, 0.0],
+        "z": [0.0, 0.0, 0.0],
+        "d": [0.5, 0.5, 0.7071],
+        "n": [-1.0, -1.0, 0.0],
+    }
+    vdf = spark.createDataFrame(
+        list(vecs.items()), "vec_id STRING, embedding ARRAY<DOUBLE>"
+    )
+    cands = {
+        1: {"a": 0.9, "b": 0.9, "c": 0.8, "z": 0.7, "d": 0.5},
+        2: {"z": 0.6, "b": 0.4},
+        # n's sims: NULL to z, negative to a; the max is the negative one
+        3: {"z": 0.9, "a": 0.8, "n": 0.5},
+    }
+    cdf = spark.createDataFrame(
+        [(q, i, rel) for q, c in cands.items() for i, rel in c.items()],
+        "query_id BIGINT, neighbor_id STRING, sim DOUBLE",
+    )
+    out = R.mmr_rerank(cdf, vdf, k=4, lam=0.5)
+    assert out.schema.simpleString() == (
+        "struct<query_id:bigint,neighbor_id:string,sel_rank:int,"
+        "mmr_score:double>"
+    )
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == _py_mmr(cands, vecs, 4, 0.5)
+    assert (1, "a", 1, 0.45) in got  # the tie with b breaks by id
+    assert [r for r in got if r[0] == 2] == [(2, "b", 2, 0.2), (2, "z", 1, 0.3)]
+    assert (3, "n", 3, 0.603554) in got
 
 
 def test_mmr_diversifies_away_from_near_dup(spark, mmr_vecs):

@@ -327,37 +327,6 @@ def test_extend_ivf_index_matches_rebuild(spark, vecs):
     )
 
 
-def test_np_round_matches_spark(spark):
-    """The numpy half-up twin must reproduce Spark ROUND on boundary
-    doubles where the shortest decimal repr disagrees with the binary
-    value (the 2.675 pattern) — Spark rounds the repr, not the bits."""
-    import numpy as np
-
-    from sample_python_lambdas_glue_and_pyspark_scripts_spark.operators.similarity import (
-        _np_round_half_up_like_spark,
-    )
-
-    vals = [
-        0.1234565,   # binary sits just BELOW the .5 boundary
-        -0.1234565,
-        0.9999995,
-        0.12345649999,  # genuinely below: must NOT round up
-        0.1234564999999999,
-        2.675,
-        -2.675,
-        0.5000004999,
-        0.1,
-        0.0,
-        1.0,
-        -1.0,
-    ]
-    df = spark.createDataFrame([(v,) for v in vals], "x DOUBLE")
-    want = [r["r"] for r in
-            df.select(F.round("x", 6).alias("r")).collect()]
-    got = _np_round_half_up_like_spark(np.array(vals), 1e6).tolist()
-    assert got == want
-
-
 def test_vectorized_topk_nan_vector_scores_null(spark):
     """A NaN-poisoned vector must score NULL (not NaN) on BOTH paths —
     Spark sorts NaN above every double, so a NaN sim would outrank every

@@ -101,6 +101,23 @@ def test_range_rule_nulls_pass(spark):
     ) == {"018", "019"}
 
 
+def test_positive_rule_nulls_pass(spark):
+    # COVERAGE F11, the PA price check (pa_etl_script.py:202-209): a
+    # price <= 0 is invalid, a NULL price passes (pandas dropna)
+    df = spark.createDataFrame(
+        [("018", "2.5"), ("019", "0"), ("020", "-1.5"), ("021", None),
+         ("022", "0.001")],
+        "opco_id string, price string",
+    )
+    rule = V.Rule("price_positive", "price", "positive")
+    assert {r["opco_id"] for r in V.invalid_rows(df, [rule]).collect()} == {
+        "019", "020"
+    }
+    clean, report = V.validate(df, [rule])
+    assert report.invalid_groups == {"019", "020"}
+    assert {r["opco_id"] for r in clean.collect()} == {"018", "021", "022"}
+
+
 DATE_REGEX_CASES = [
     # (value, valid) — reference: test_date_format_regex.py:20-265
     ("2020-08-06 00:00:00", True),
