@@ -49,7 +49,8 @@ def np_round_half_up_like_spark(x, scale: float = 1e6):
     except the 2.675-style boundary band (shortest repr ends in ...5
     while the binary value sits just below); only that band routes
     through Python's repr -> Decimal, which reproduces
-    BigDecimal.valueOf exactly. NaN and ±inf pass through, as in Spark.
+    BigDecimal.valueOf exactly. NaN and ±inf pass through and zero is
+    never negative, as in Spark.
     Parity is pinned by tests/test_driver_frame.py::test_np_round_matches_spark.
     """
     import numpy as np
@@ -67,6 +68,9 @@ def np_round_half_up_like_spark(x, scale: float = 1e6):
             float(Decimal(repr(float(v))).quantize(q, rounding=ROUND_HALF_UP))
             for v in x[band].ravel()
         ]
+    # Spark rounds through BigDecimal, which has no negative zero: a
+    # result that rounds to zero is +0.0 (both paths can give -0.0)
+    out += 0.0
     return out
 
 

@@ -147,11 +147,10 @@ class ValidationReport:
 
 
 def flag_columns(df: DataFrame, rules: list[Rule]) -> DataFrame:
-    """Attach one boolean ``__viol_<rule>`` column per rule (no action)."""
-    out = df
-    for r in rules:
-        out = out.withColumn(f"__viol_{r.name}", r.invalid_condition())
-    return out
+    """Attach one boolean ``__viol_<rule>`` column per rule, in rule
+    order (no action). One projection: each ``withColumn`` would analyse
+    the plan again."""
+    return df.withColumns({f"__viol_{r.name}": r.invalid_condition() for r in rules})
 
 
 def matrix_aggs(rules: list[Rule]) -> list[Column]:

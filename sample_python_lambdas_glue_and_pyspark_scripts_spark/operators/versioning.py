@@ -114,6 +114,7 @@ CATALOG_SCHEMA = StructType([
     StructField(c, StringType())
     for c in ("opco_id", "table_type", "table_name", "effective_date")
 ])
+_CatalogRow = Row(*CATALOG_SCHEMA.fieldNames())
 
 
 @dataclass
@@ -144,10 +145,14 @@ class VersionedCatalog:
     def init_opco(self, opco: str) -> None:
         self._write_catalog(_with_opco(self._read_catalog(), opco))
 
-    def init_opco_if_absent(self, opco: str) -> None:
+    def init_opco_if_absent(self, opco: str) -> list[Row]:
+        """Register ``opco`` unless the catalog has it; returns the catalog
+        rows as they stand afterwards, for ``load_opco``."""
         rows = self._read_catalog()
         if not any(r["opco_id"] == opco for r in rows):
-            self._write_catalog(_with_opco(rows, opco))
+            rows = _with_opco(rows, opco)
+            self._write_catalog(rows)
+        return rows
 
     def _read_catalog(self) -> list[Row]:
         """The catalog rows; ``[]`` only when no catalog was ever written.
@@ -213,8 +218,12 @@ class VersionedCatalog:
         policy: ValidationPolicy = ValidationPolicy.FAIL,
         effective_date_col: str = "effective_date",
     ) -> LoadResult:
-        """The per-opco load of find_tables_to_load, on parquet tables."""
-        rows = self._read_catalog()
+        """The per-opco load of find_tables_to_load, on parquet tables.
+
+        Registers ``opco`` first if the catalog lacks it; the rows that
+        registration read or wrote serve the whole load, so the catalog
+        is read once."""
+        rows = self.init_opco_if_absent(opco)
         active = _lookup(rows, opco, "ACTIVE")
         future = _lookup(rows, opco, "FUTURE")
         running = running_export_opcos or set()
@@ -266,12 +275,12 @@ class VersionedCatalog:
         fs.delete(hpath(path), True)
 
 
-def _with_opco(rows: list, opco: str) -> list:
+def _with_opco(rows: list[Row], opco: str) -> list[Row]:
     """Catalog rows with ``opco`` (re)registered: fresh ACTIVE/FUTURE
     table names, no effective date."""
     return [r for r in rows if r["opco_id"] != opco] + [
-        (opco, "ACTIVE", f"price_zone_{opco}_a", None),
-        (opco, "FUTURE", f"price_zone_{opco}_b", None),
+        _CatalogRow(opco, "ACTIVE", f"price_zone_{opco}_a", None),
+        _CatalogRow(opco, "FUTURE", f"price_zone_{opco}_b", None),
     ]
 
 

@@ -29,6 +29,12 @@ ledger/catalog rows are one-partition JVM literals (one job, one file
 per write), and per-table row counts plus FUTURE's min(effective_date)
 are observed on the ACTIVE/FUTURE appends themselves
 (``DataFrame.observe``) rather than counted or re-read afterwards.
+Each ledger read is one job (the ledger is read as one partition, so its
+windows need no exchange): admission at the start of the run and the
+running full exports at load time, where the reference reads them.
+Each opco load reads the catalog once: ``load_opco`` registers the opco
+if absent and loads from the rows that registration read or wrote,
+afresh on every retry attempt.
 """
 
 from __future__ import annotations
@@ -150,7 +156,6 @@ def run_pipeline(spark: SparkSession, cfg: RunConfig) -> RunOutcome:
             while True:
                 attempt += 1
                 try:
-                    catalog.init_opco_if_absent(opco)
                     catalog.load_opco(
                         written.filter(F.col("opco_id") == opco),
                         opco,

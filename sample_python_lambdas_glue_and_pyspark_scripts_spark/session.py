@@ -10,6 +10,28 @@ Design notes (100 TB posture):
 - Session timezone pinned to UTC so timestamp semantics are stable and
   match the DuckDB oracle regardless of host timezone.
 - Arrow enabled for the Pandas-UDF operators (dedup/similarity/multimodal).
+- DataFrame debugging off (``spark.python.sql.dataFrameDebugging.enabled``).
+  While it is on, PySpark wraps every ``functions``/DataFrame call in
+  ``pyspark.errors.utils._with_origin``, which records the Python call
+  site in the JVM: about five py4j round trips per call (active session,
+  JVM class lookup, ``conf.get``, origin set, origin clear), half of all
+  the driver's round trips on the price_zone load and the curation
+  queries, and an ``import IPython`` (26 MB of peak driver RSS on the
+  perfbench price_zone load) plus a failing ``import ipykernel`` (a full
+  ``sys.path`` scan) per call. With
+  it off, the ``== DataFrame ==`` block of a runtime error names a JVM
+  frame instead of the Python file and line that built the failing
+  column; the error class and message text are unchanged. To get the
+  Python line back, pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to the FIRST session of the process: PySpark reads the value once, on
+  the first wrapped call, and caches it process-wide.
+- The package's parent directory is the Python workers' PYTHONPATH
+  (``spark.executorEnv.PYTHONPATH``): pandas kernels pickle package
+  functions by reference, so a worker must import the package whatever
+  the driver's working directory is. Spark puts this entry after its own
+  pyspark/py4j zips and before the PYTHONPATH the executor JVM inherited
+  (in local mode, the driver's).
 """
 
 from __future__ import annotations
@@ -33,6 +55,7 @@ def get_spark(
     cpus = default_parallelism()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     shuffle_partitions = shuffle_partitions or cpus
+    package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -48,6 +71,8 @@ def get_spark(
         # --- python interop ------------------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", package_parent)
         # --- determinism / oracle parity -----------------------------------
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")

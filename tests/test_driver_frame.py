@@ -94,7 +94,8 @@ def test_np_round_matches_spark(spark):
     """The numpy half-up twin must reproduce Spark ROUND on boundary
     doubles where the shortest decimal repr disagrees with the binary
     value (the 2.675 pattern) — Spark rounds the repr, not the bits.
-    A scalar in the boundary band (1/128 = 0.0078125) rounds too."""
+    A scalar in the boundary band (1/128 = 0.0078125) rounds too, and
+    tiny negatives round to +0.0, as Spark's BigDecimal has no -0.0."""
     import numpy as np
 
     vals = [
@@ -110,6 +111,10 @@ def test_np_round_matches_spark(spark):
         0.0,
         1.0,
         -1.0,
+        -0.0,
+        -1e-9,         # fast path: sign(x) * floor(...) is -0.0
+        -4e-7,
+        -4.9999999e-7,  # boundary band: Decimal gives -0.000000
         1.0 / 128,
     ]
     df = spark.createDataFrame([(v,) for v in vals], "x DOUBLE")
@@ -117,4 +122,7 @@ def test_np_round_matches_spark(spark):
             df.select(F.round("x", 6).alias("r")).collect()]
     got = np_round_half_up_like_spark(np.array(vals), 1e6).tolist()
     assert got == want
+    assert [math.copysign(1.0, v) for v in got] == [
+        math.copysign(1.0, v) for v in want
+    ]
     assert float(np_round_half_up_like_spark(1.0 / 128)) == want[-1]

@@ -326,12 +326,15 @@ def test_loadable_opcos_match_partitioned_output(spark, workdir):
 def test_run_pipeline_job_count_pin(spark, workdir, monkeypatch):
     """Fast-tier pin on the Spark jobs of a partial then a full
     run_pipeline on the 5-row fixture (local[4] test session, two opcos
-    loaded per run): 86 jobs before the load path's job diet, 41 after.
+    loaded per run): 86 jobs before the load path's job diet, 41 after
+    it, 31 with one-job ledger reads and one catalog read per opco load.
     The diet: schema-pinned reads of the ledger, catalog, partitioned
     output and FUTURE probe; one catalog read per catalog operation;
     loaded opcos from the validation report; row counts and FUTURE's
     min(effective_date) observed on the appends; one-partition
-    ledger/catalog rows.
+    ledger/catalog rows; the ledger read as one partition, so
+    ``admit`` and ``full_export_opcos`` need no exchange; ``load_opco``
+    loading from the rows its own registration step read.
 
     Every parquet read also targets an existing path: absence is decided
     with ``fs.exists``, so a run on a fresh work dir never raises (and
@@ -373,4 +376,4 @@ def test_run_pipeline_job_count_pin(spark, workdir, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert missing == []
-    assert jobs <= 41
+    assert jobs <= 31, jobs

@@ -229,3 +229,36 @@ def test_date_unchanged_when_future_was_nonempty(spark, root):
     )
     assert (r.rows_written_future, r.effective_date) == (1, None)
     assert _future_date(spark, cat, "019") == "2024-02-01 00:00:00"
+
+
+def test_load_opco_reads_the_catalog_once(spark, root, monkeypatch):
+    """A load reads the catalog once, both for an opco it registers and
+    for one already registered, and the effective-date rewrite made from
+    the rows registration wrote keeps every other opco's rows."""
+    cat = VersionedCatalog(spark, root)
+    cat.init_opco("001")
+    reads = []
+    read = VersionedCatalog._read_catalog
+
+    def counted(self):
+        reads.append(1)
+        return read(self)
+
+    monkeypatch.setattr(VersionedCatalog, "_read_catalog", counted)
+    full = cat.load_opco(
+        _df(spark, "019", "2024-02-03 00:00:00", "2024-02-01 00:00:00"), "019",
+        is_partial=False,
+    )
+    assert len(reads) == 1
+    partial = cat.load_opco(
+        _df(spark, "001", "2024-01-05 00:00:00"), "001", is_partial=True,
+    )
+    assert len(reads) == 2
+    monkeypatch.undo()
+    assert (full.rows_written_future, full.effective_date) == (2, "2024-02-01 00:00:00")
+    assert (partial.rows_written_active, partial.rows_written_future) == (1, 0)
+    assert _future_date(spark, cat, "019") == "2024-02-01 00:00:00"
+    assert sorted(
+        (r["opco_id"], r["table_type"])
+        for r in spark.read.parquet(cat.catalog_path).collect()
+    ) == [("001", "ACTIVE"), ("001", "FUTURE"), ("019", "ACTIVE"), ("019", "FUTURE")]
