@@ -56,24 +56,18 @@ from sample_python_lambdas_glue_and_pyspark_scripts_spark.operators import (
 from sample_python_lambdas_glue_and_pyspark_scripts_spark.operators.util import (
     driver_frame,
 )
+from sample_python_lambdas_glue_and_pyspark_scripts_spark.session import (
+    ensure_runtime_confs,
+)
 from sample_python_lambdas_glue_and_pyspark_scripts_spark.streaming import (
     drift as DR,
 )
 
 
-def _ensure_session_confs(spark: SparkSession) -> None:
-    """Make the contract robust to ANY caller-provided session: the driver
-    builds its own SparkSession, so the configs these queries depend on
-    must be applied at query time (single definition: session.py)."""
-    from sample_python_lambdas_glue_and_pyspark_scripts_spark.session import (
-        ensure_runtime_confs,
-    )
-
-    ensure_runtime_confs(spark)
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _ensure_session_confs(spark)
+    # callers may pass their own, unconfigured session: apply the confs
+    # these queries depend on at query time
+    ensure_runtime_confs(spark)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -501,7 +495,7 @@ def q_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data dir) — identical Catalyst plans as the DataFrame API."""
     from sample_python_lambdas_glue_and_pyspark_scripts_spark.sql import register_tables
 
-    _ensure_session_confs(spark)
+    ensure_runtime_confs(spark)
     register_tables(spark, sf_dir, ["orders", "customer"])
     return spark.sql(
         """

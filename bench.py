@@ -1,19 +1,23 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: runs every contract query at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data, see ``SF_DIR``) on local[$SPARK_GRAFT_CPUS]
+and prints one JSON line {"metric": ..., "value": total_sec, "unit":
+"sec", "queries": {name: sec}, "sf": ...}, then one compact line per query
+({"q", "sec", "jobs"}, ascending by sec, so the heaviest queries sit
+nearest the end of the output) and the headline total, last.
 
-Each query is forced with a noop-format write (full computation, no
-driver collect). Before timing, an untimed warmup pass scans EVERY input
-table once (JVM + codegen init + parquet footers + OS page cache) so the
-first timed queries are not charged session/cold-IO startup — round 1
-showed 2.5-4.8x cold-start inflation on the earliest queries when only
+Each query is timed by ``time_query`` (also the loop ``tools/probe.py``
+uses): build the DataFrame, force it with a noop-format write (full
+computation, nothing collected), best of $BENCH_BEST_OF (default 2).
+Before timing, an untimed warmup pass scans EVERY input table once (JVM
++ codegen init + parquet footers + OS page cache) so the first timed
+queries are not charged session/cold-IO startup — round 1 showed
+2.5-4.8x cold-start inflation on the earliest queries when only
 lineitem was warmed.
 
 Failure isolation: a raising query is recorded as an error row and timing
 continues — one regression must not cost the whole round's perf signal
 (round 2's bench DNF'd on the first exception). Exit code is non-zero if
-any query failed, but the JSON line is always emitted.
+any query failed, but the JSON lines are always emitted.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -221,19 +226,66 @@ def warmup(spark) -> None:
             print(f"BENCH-WARMUP-ERROR {name}: {exc}", file=sys.stderr)
 
 
+def time_query(spark, build, best_of: int = 2) -> dict:
+    """Time one query: ``build()`` makes the DataFrame (its eager
+    construction jobs run there), then a noop write forces it.
+
+    ``total_s`` is the minimum over ``best_of`` attempts of build +
+    force; ``build_s`` and ``exec_s`` are each their own minimum. Each
+    phase runs under its own job group, and ``build_jobs`` /
+    ``exec_jobs`` count the Spark jobs of the last attempt. An exception
+    in the first attempt propagates. One in a later attempt ends the
+    loop: the result keeps the successful attempts' timings and carries
+    the exception text as ``error``."""
+    sc = spark.sparkContext
+    best: dict[str, float] = {}
+    groups: dict[str, str] = {}
+    error = None
+    try:
+        for _ in range(best_of):
+            attempt = {ph: f"{ph}-{uuid.uuid4().hex}" for ph in ("build", "exec")}
+            try:
+                sc.setJobGroup(attempt["build"], attempt["build"])
+                t0 = time.perf_counter()
+                df = build()
+                t1 = time.perf_counter()
+                sc.setJobGroup(attempt["exec"], attempt["exec"])
+                force(df)
+                t2 = time.perf_counter()
+            except Exception as exc:  # noqa: BLE001 — keep earlier attempts
+                if not best:
+                    raise
+                error = f"{type(exc).__name__}: {exc}"[:500]
+                break
+            for key, el in (
+                ("build_s", t1 - t0), ("exec_s", t2 - t1), ("total_s", t2 - t0)
+            ):
+                best[key] = min(best.get(key, el), el)
+            groups = attempt
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store fills from the listener bus: drain it so the last
+    # job of the exec phase is counted
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    out: dict = {k: round(v, 3) for k, v in best.items()}
+    for ph, group in groups.items():
+        out[f"{ph}_jobs"] = len(tracker.getJobIdsForGroup(group))
+    if error is not None:
+        out["error"] = error
+    return out
+
+
 def main() -> None:
     spark = get_spark(app_name="spark-graft-bench")
     qs = entrymod.queries()
+    # curated lead order first (it sets Python-worker and IO warmth
+    # identically run-to-run), then every remaining contract query
+    # alphabetically, so >2x regressions are detectable on the whole
+    # surface
     names = [n for n in BENCH_QUERIES if n in qs]
-    # full coverage tier: every remaining contract query (alphabetical,
-    # after the curated headline ordering above so Python-worker and IO
-    # warmth is identical run-to-run). >2x regressions are detectable on
-    # the whole surface, not just the headline set. BENCH_HEADLINE_ONLY=1
-    # restores the curated headline tier (117 entries after the round-8
-    # refresh added r7/r8 representatives; the 83-entry r6 tier and the
-    # 62-query r3 totals are not comparable).
-    if not os.environ.get("BENCH_HEADLINE_ONLY"):
-        names += sorted(n for n in qs if n not in names)
+    names += sorted(n for n in qs if n not in names)
     # r14 (VERDICT r13 item 6, amended): the three DOCUMENTED quadratic
     # /index-less oracle mirrors (each has a pinned-equivalent scale
     # sibling) cost ~15 s of every run. The verdict proposed dropping
@@ -248,6 +300,7 @@ def main() -> None:
     warmup(spark)
 
     timings: dict[str, float] = {}
+    jobs: dict[str, int] = {}
     errors: dict[str, str] = {}
     # best-of-N (default 2): run-to-run variance on this host is large
     # (semantic_dedup measured 2.9-13 s across identical runs); the min
@@ -255,22 +308,16 @@ def main() -> None:
     # draw, at the cost of one extra execution per query
     best_of = max(1, int(os.environ.get("BENCH_BEST_OF", "2")))
     for name in names:
-        best = None
-        err = None
-        for _ in range(best_of):
-            t0 = time.perf_counter()
-            try:
-                force(qs[name](spark, SF_DIR))
-            except Exception as exc:  # noqa: BLE001 — isolate per query
-                err = f"{type(exc).__name__}: {exc}"[:500]
-                print(f"BENCH-ERROR {name}: {err}", file=sys.stderr)
-                break
-            el = time.perf_counter() - t0
-            best = el if best is None else min(best, el)
-        if best is not None:
-            timings[name] = round(best, 3)  # any successful attempt counts
-        elif err is not None:
-            errors[name] = err
+        try:
+            r = time_query(spark, lambda: qs[name](spark, SF_DIR), best_of)
+        except Exception as exc:  # noqa: BLE001 — isolate per query
+            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+            print(f"BENCH-ERROR {name}: {errors[name]}", file=sys.stderr)
+            continue
+        if "error" in r:  # a later attempt failed; the earlier ones count
+            print(f"BENCH-ERROR {name}: {r['error']}", file=sys.stderr)
+        timings[name] = r["total_s"]
+        jobs[name] = r["build_jobs"] + r["exec_jobs"]
 
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     try:
@@ -291,16 +338,14 @@ def main() -> None:
     # truncated tail of stdout, so only ~70/232 queries were
     # regression-diffable across rounds (r10 verdict task 3). Record
     # runs commit this file; BASELINE.md regression claims cite it.
-    # Guarded (ADVICE r11): a headline-only or errored dev run must not
+    # Guarded (ADVICE r11): a subset or errored dev run must not
     # clobber the committed 239-query map that bench_diff.py claims
     # cite — those runs only write when BENCH_FULL_JSON names an
     # explicit (presumably untracked) path.
     full_path = os.environ.get("BENCH_FULL_JSON")
     skip_reason = None
     if full_path is None:
-        if os.environ.get("BENCH_HEADLINE_ONLY"):
-            skip_reason = "BENCH_HEADLINE_ONLY subset run"
-        elif os.environ.get("BENCH_SKIP_MIRRORS"):
+        if os.environ.get("BENCH_SKIP_MIRRORS"):
             skip_reason = "BENCH_SKIP_MIRRORS subset run"
         elif errors:
             skip_reason = f"{len(errors)} errored queries"
@@ -332,15 +377,13 @@ def main() -> None:
         "n_errors": len(errors),
     })
     print(summary_line)
-    # r14 (VERDICT r13 item 3, additions only): the single big
-    # per-query map line above overflows the driver's retained stdout
-    # tail, so PERF's round-over-round per-query comparison came back
-    # empty two rounds running (n_common: 0). Re-emit the map as one
-    # COMPACT line per query — each line is complete, parseable JSON on
-    # its own, so whatever suffix of stdout the driver keeps carries as
-    # many whole per-query entries as fit.
-    for name in sorted(timings):
-        print(json.dumps({"q": name, "sec": timings[name]}))
+    # the single big per-query map line above overflows a tail-truncated
+    # stdout record, so re-emit the map as one COMPACT line per query —
+    # each line is complete, parseable JSON on its own. Ascending by
+    # seconds, errors after them: whatever suffix of stdout is kept
+    # carries the heaviest queries and every error.
+    for name in sorted(timings, key=timings.get):
+        print(json.dumps({"q": name, "sec": timings[name], "jobs": jobs[name]}))
     for name in sorted(errors):
         print(json.dumps({"q": name, "error": errors[name][:120]}))
     # compact summary LAST: the driver's bench record keeps only the

@@ -577,8 +577,8 @@ def cap_per_group_salted(
 
     This is the documented 100 TB posture for hot-group caps
     (``web.domain_capped_docs(..., n_salts=...)``); the plain window is
-    fine when group sizes are bounded. Measured
-    (``tools/hot_domain_probe.py``, BASELINE.md): 1.48× over the plain
+    fine when group sizes are bounded. Measured (BASELINE.md,
+    "Hot-domain window-skew probe"): 1.48× over the plain
     window at 48M rows with 94% in one domain (string order key);
     break-even-to-slightly-behind when no group dominates — the
     per-bucket top-n only truncates buckets holding > n rows, so a fat
@@ -634,7 +634,7 @@ def cap_per_group_hot_routed(
     fits the broadcast budget), and splits the input with map-side
     semi/anti joins.
 
-    MEASURED caveat (``tools/hot_domain_probe.py``, BASELINE.md): the
+    MEASURED caveat (BASELINE.md, "Hot-domain window-skew probe"): the
     routing itself costs ~two extra passes over the input (count pass
     + the semi/anti split re-scan), which at 48M rows exactly ate the
     straggler win — plain 17.0 s, all-salted 11.5 s, routed 17.4 s at

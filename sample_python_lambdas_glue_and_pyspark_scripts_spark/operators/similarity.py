@@ -392,7 +392,7 @@ def build_ivf_index(
     it via ``ivf_topk(..., index=...)``: the probe measured serve-only
     top-k at ~19-25x over brute force at recall 1.0 (nprobe=4,
     200k x 64d corpus, 256 cells), vs ~2x when the build is re-paid
-    inline (tools/ann_probe.py).
+    inline (BASELINE.md, "ANN scaling probe").
     """
     centroids = (
         corpus.select(id_col, vec_col).orderBy(F.col(id_col).asc()).limit(ncells)
@@ -2211,7 +2211,7 @@ def ivf_pq_residual_topk(
     their k_codes × m_sub capacity on within-cell variation instead of
     re-describing the coarse structure IVF already captured.
 
-    MEASURED guidance (tools/residual_recall_probe.py, BASELINE.md):
+    MEASURED guidance (BASELINE.md, "Residual-vs-flat IVF-PQ recall"):
     the upgrade holds only over genuinely CLUSTERED corpora (probe:
     0.225 vs 0.205 recall@10 with true clusters as centroids); on
     near-isotropic data with raw-vector first-k coarse centroids,
@@ -2444,7 +2444,8 @@ def _ivf_exact_l2_topk(
     """Exact L2 top-k restricted to the SAME nprobe candidate set the
     IVF-PQ serve scores — the reference that isolates CODEBOOK quality
     from cell-probe misses and metric mismatch (the
-    residual_recall_probe methodology, now fit-time callable)."""
+    methodology of BASELINE.md's "Residual-vs-flat IVF-PQ recall",
+    now fit-time callable)."""
     query_cells = assign_cells(
         queries, centroids, id_col, vec_col, nprobe=nprobe
     ).select(F.col(id_col).alias("query_id"), "cell")

@@ -156,7 +156,8 @@ def domain_capped_docs(
 
     ``n_salts`` switches to the salted two-phase top-n
     (:func:`..sampling.cap_per_group_salted`) — the measured
-    hot-domain lever (1.48× at 94%-hot, ``tools/hot_domain_probe.py``)
+    hot-domain lever (1.48× at 94%-hot, BASELINE.md "Hot-domain
+    window-skew probe")
     for when one domain can hold a large fraction of the crawl (a hot
     domain otherwise sorts in ONE reducer). ``hot_min_rows``
     additionally enables the count-prefiltered ROUTED form

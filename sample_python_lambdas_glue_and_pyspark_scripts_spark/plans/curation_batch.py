@@ -16,7 +16,7 @@ in the standard cost order (cheapest key first, content surgery last):
 Every stage is optional (None/0 skips it); each consumes the previous
 stage's survivors only, so the expensive content stages never see rows
 a cheaper key already killed — the RefinedWeb/C4 ordering argument.
-Stage boundaries are lazily localCheckpointed so the per-stage census
+Stage boundaries are eagerly localCheckpointed so the per-stage census
 (`report`) never re-runs upstream stages.
 
 Returns ``(kept_docs, report)``: the surviving documents (text
@@ -57,7 +57,6 @@ def curate_corpus(
     c4_clean: dict | None = None,
     scrub_pii: bool = False,
     return_ledger: bool = False,
-    on_stage=None,
 ) -> tuple[DataFrame, DataFrame] | tuple[DataFrame, DataFrame, DataFrame]:
     """Run the cascade (see module docstring). ``url_col`` enables
     stages 1 and 5; ``min_quality`` enables stage 4 (keep docs with
@@ -96,18 +95,9 @@ def curate_corpus(
         # quadratic number of stage evaluations ("Block rdd_N already
         # exists" warnings in the bench log). Eager checkpointing runs
         # each stage exactly once, every consumer (next stage, census
-        # row, ledger anti-join) reads the cached blocks. When an
-        # on_stage hook is present the hook's own force() does the
-        # in-order materialization — keep the checkpoint lazy there so
-        # the hook still measures the stage's true cost.
-        out = df.localCheckpoint(eager=on_stage is None)
+        # row, ledger anti-join) reads the cached blocks.
+        out = df.localCheckpoint(eager=True)
         stages.append((name, out))
-        if on_stage is not None:
-            # observation hook (scale probes time each stage by forcing
-            # the checkpointed frame here — materialization is reused by
-            # every downstream consumer, so the hook shifts WHEN work
-            # happens, never WHAT is computed)
-            on_stage(name, out)
         return out
 
     if c4_clean is not None:

@@ -41,6 +41,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Runtime-settable confs the contract queries depend on. ``get_spark``
+# builds with them and ``ensure_runtime_confs`` applies them to any
+# session. (ANSI stays on — Spark 4 default; null-on-failure uses try_*.)
+RUNTIME_CONFS = {
+    # TIMESTAMP(NANOS) parquet (events.ts) has no Spark type; read as
+    # nanos-since-epoch long (ordering-compatible; convert on output
+    # with functions.nanos_to_timestamp).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # formatted/epoch outputs must match the timezone-naive DuckDB
+    # oracle on any host
+    "spark.sql.session.timeZone": "UTC",
+    # no ancient-date exceptions on vanilla sessions
+    "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
+    "spark.sql.parquet.datetimeRebaseModeInRead": "CORRECTED",
+    # keep hive-partition values as strings: 'opco_id=019' must read
+    # back as '019', not int 19 (reference treats opco ids as strings;
+    # the orchestrated pipelines read their own partitionBy output back)
+    "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
+}
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -73,22 +94,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", package_parent)
-        # --- determinism / oracle parity -----------------------------------
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-        .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-        # TIMESTAMP(NANOS) parquet (events.ts) has no Spark type; read as
-        # nanos-since-epoch long (ordering-compatible; convert on output
-        # with functions.nanos_to_timestamp).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # keep hive-partition values as strings: 'opco_id=019' must read
-        # back as '019', not int 19 (reference treats opco ids as strings)
-        .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
         # quieter local runs
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    # the determinism / oracle-parity confs, then the caller's overrides
+    for k, v in {**RUNTIME_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -96,24 +107,9 @@ def get_spark(
 
 
 def ensure_runtime_confs(spark: SparkSession) -> None:
-    """Apply the runtime-settable confs the contract queries depend on to
-    an ARBITRARY caller-provided session (the driver builds its own,
-    unconfigured). One definition — __spark_entry__ and every plan module
-    must use this, not a private copy (conf drift broke only the copies'
-    queries in the past):
-    - nanosAsLong: events.parquet is TIMESTAMP(NANOS), unreadable otherwise;
-    - UTC session timezone: formatted/epoch outputs must match the
-      timezone-naive DuckDB oracle on any host;
-    - rebase modes: stop ancient-date exceptions on vanilla sessions;
-    - partition-value inference OFF: hive-partitioned round-trips must
-      return opco_id="019" as the string it was written as, not int 19
-      (the orchestrated pipelines read their own partitionBy output back).
-    (ANSI stays on — Spark 4 default; null-on-failure uses try_*.)
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-    spark.conf.set("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
+    """Apply ``RUNTIME_CONFS`` to an ARBITRARY caller-provided session
+    (a caller may build its own, unconfigured). One definition —
+    __spark_entry__ and every plan module must use this, not a private
+    copy (conf drift broke only the copies' queries in the past)."""
+    for k, v in RUNTIME_CONFS.items():
+        spark.conf.set(k, v)

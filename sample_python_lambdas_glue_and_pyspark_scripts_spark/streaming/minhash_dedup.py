@@ -168,8 +168,9 @@ def make_batch_fn(
     bands: int = 4,
 ):
     """The per-micro-batch admission callback, exposed standalone so
-    instrumentation (tools/streaming_minhash_probe.py) wraps and times
-    the REAL production path instead of re-implementing it."""
+    instrumentation (BASELINE.md, "Streaming MinHash intake probe")
+    wraps and times the REAL production path instead of
+    re-implementing it."""
     claimed_dir = f"{work_dir}/claimed"
     kept_dir = f"{work_dir}/kept"
 

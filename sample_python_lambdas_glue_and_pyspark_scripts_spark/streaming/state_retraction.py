@@ -93,22 +93,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import band_keys, minhash_signature
+from ..operators.retraction import _ids_df
 from ..sources.promote import hadoop_fs, promote_swap, recover_backup
 
 _BAK_PREFIX = ".retract_bak_"
 _TMP_PREFIX = ".retract_tmp_"
-
-
-def _ids_df(retract_ids: DataFrame, id_col: str) -> DataFrame:
-    cols = retract_ids.columns
-    if id_col in cols:
-        return retract_ids.select(id_col)
-    if len(cols) == 1:
-        return retract_ids.select(F.col(cols[0]).alias(id_col))
-    raise ValueError(
-        f"state_retraction: retract_ids must have an {id_col!r} column "
-        f"or be single-column, got {cols}"
-    )
 
 
 def list_state_epochs(spark: SparkSession, table_dir: str) -> list[int]:
